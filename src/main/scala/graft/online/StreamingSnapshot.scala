@@ -2,8 +2,10 @@ package graft.online
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import graft.streaming.StreamFeatures
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
@@ -29,10 +31,12 @@ class SnapshotStore(val id: String) {
   private val taskW = new AtomicLong()
   private val driverW = new AtomicLong()
 
-  /** Latest-wins merge of a row batch. `ConcurrentHashMap.merge` is
-    * atomic per key and the merge function is commutative-associative
-    * (event-time order, amount tie-break), so concurrent partition
-    * writers converge to the same snapshot in any interleaving.
+  /** Latest-wins merge of a row batch: newer `ts_micros` wins, then the
+    * larger `amount`. `ConcurrentHashMap.merge` is atomic per key, and the
+    * rule picks the same row in any order as long as rows equal on both
+    * fields are equal — true of the stream processor's output, where
+    * same-time peers share their window features. So concurrent writers,
+    * any row order and replayed batches converge to the same snapshot.
     */
   def upsert(batch: Iterator[StreamFeatures]): Unit = {
     if (TaskContext.get() != null) taskW.incrementAndGet()
@@ -64,47 +68,46 @@ class SnapshotStore(val id: String) {
 }
 
 object SnapshotStore {
-  private val registry = new ConcurrentHashMap[String, SnapshotStore]()
+  private[graft] val registry = new ConcurrentHashMap[String, SnapshotStore]()
 
-  /** Task-side store resolution by id — the seam where a production sink
+  /** Task-side store resolution — the seam where a production sink
     * resolves its per-executor KV client instead. In-JVM (local[n]) this
-    * returns the exact instance the driver registered.
+    * returns the instance a running query registered; once the query has
+    * ended, a straggler task fails here instead of writing nowhere.
     */
-  def forId(id: String): SnapshotStore =
-    registry.computeIfAbsent(id, new SnapshotStore(_))
-
-  private[online] def register(store: SnapshotStore): Unit =
-    registry.put(store.id, store)
+  def forId(key: String): SnapshotStore = Option(registry.get(key)).getOrElse(
+    throw new IllegalStateException(s"no snapshot store registered as $key"))
 }
 
 object StreamingSnapshot {
-  /** Wire a feature stream into the store. Each micro-batch first
-    * reduces to ONE row per key (`reduceGroups` — partial map-side
-    * combine, so a hot key's thousands of in-batch updates become one
-    * upsert), then every partition writes its keys straight from the
-    * task via `foreachPartition`. The driver never iterates rows — the
-    * previous `toLocalIterator` funnel is gone; at 100 TB/day stream
-    * scale the write fan-out is #partitions-wide and bounded by
-    * one row per (key, batch).
+  /** Wire a feature stream into the store: each micro-batch partition
+    * upserts from its task. The partitions are `transformWithState`'s
+    * output, already grouped by `customer_id`, so a key's rows all come
+    * from one task and [[SnapshotStore.upsert]]'s latest-wins merge stores
+    * what a global per-key reduce would, without a second shuffle. The
+    * store is registered for task-side lookup until the query stops or
+    * fails; the caller's `store` stays readable after that.
     */
   def start(features: Dataset[StreamFeatures], store: SnapshotStore): StreamingQuery = {
-    SnapshotStore.register(store)
-    val sid = store.id
-    features.writeStream
+    // a key per run, so a run that ends never unregisters a later run's store
+    val key = s"${store.id}/${UUID.randomUUID()}"
+    SnapshotStore.registry.put(key, store)
+    val query = try features.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[StreamFeatures], _: Long) =>
-        import batch.sparkSession.implicits._
-        batch.groupByKey(_.customer_id)
-          .reduceGroups { (a: StreamFeatures, b: StreamFeatures) =>
-            if (b.ts_micros > a.ts_micros ||
-              (b.ts_micros == a.ts_micros && b.amount >= a.amount)) b
-            else a
-          }
-          .map(_._2)
-          .foreachPartition { (it: Iterator[StreamFeatures]) =>
-            SnapshotStore.forId(sid).upsert(it)
-          }
+        batch.foreachPartition((it: Iterator[StreamFeatures]) => SnapshotStore.forId(key).upsert(it))
       }
       .start()
+    catch { case e: Throwable => SnapshotStore.registry.remove(key); throw e }
+    val streams = features.sparkSession.streams
+    def release(): Unit = { SnapshotStore.registry.remove(key); streams.removeListener(onEnd) }
+    lazy val onEnd: StreamingQueryListener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = if (e.runId == query.runId) release()
+    }
+    streams.addListener(onEnd)
+    if (!query.isActive) release() // a run that already ended posts the listener no event
+    query
   }
 }
