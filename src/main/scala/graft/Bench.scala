@@ -182,45 +182,7 @@ object Bench {
     }
     val startLoad = (0 to 2).map(loadavgField)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing floor (Spark default 1m serializes compute-dense
-      // small shuffles: the 72-column q37 feature pass ran on 2
-      // post-shuffle partitions; q38/q98 read 3.4x/1.3x worse at 1m).
-      // 64k (round 16) over-fragmented token-explode shuffles — the
-      // BM25/text cluster (q268/q270/q271/q286) ran 2-3x slower than at
-      // 256k, which keeps the q37/q38/q98 wins (r17 three-way bisect,
-      // OPTIMIZATION_r17.md). Scale-neutral: with parallelismFirst
-      // (default on) the coalescing target is max(bytes/parallelism,
-      // FLOOR), so the floor only binds when a shuffle is smaller than
-      // parallelism×256k — at production scale the bytes/parallelism
-      // term dominates and this setting is inert. Env-overridable for
-      // cluster profiles.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "256k"))
-      // Janino compiled-class cache (static conf, default 100 entries):
-      // the suite's queries generate ~50-300 whole-stage/codegen units
-      // EACH, so the default LRU evicts everything long before a shape
-      // repeats — every rep of every query re-pays full source codegen +
-      // janino compile (measured: q202 warm rep 14.7 s -> 7.8 s, q194
-      // 12.9 s -> 8.2 s once compiled classes are reused; the Profile
-      // counter reads ~0 compilations on warm reps with the larger
-      // cache). This is compiled-CODE caching — the same class of
-      // fixed-cost the bench's existing JIT warmup already excludes, and
-      // what any long-running production driver amortizes — never result
-      // or data caching: every execution still scans parquet and
-      // computes every row. Env-overridable; identical setting on the
-      // Verify path so the oracle executes the same compiled plans.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "100000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // one-time JVM/codegen/scheduler warmup so per-query numbers measure
     // the queries, not first-stage JIT. Prime each table's file listing +
     // parquet footer and one query per execution path (hash agg, window +
@@ -343,11 +305,7 @@ object Bench {
     val loads = repLoads.map(f2).mkString("[", ",", "]") // per rep round
     val gateJson = loadGate.map(g => f2(g)).getOrElse("null")
     val startL = startLoad.map(f2).mkString("[", ",", "]")
-    // fit_memo: q230's eight model fits memoize per (query, sfDir,
-    // corpus fingerprint) — rep 1 pays the trainers, later reps price
-    // only the store lifecycle (the intended artifact); stamped here so
-    // a reader of the JSON knows the rep-1-vs-rep-2 gap is by design
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"dispersion":$disp,"retried":$retr,"profile":$prof,"loadavg":$loads,"start_loadavg":$startL,"retry_loadavg":${f2(loadavg())},"load_gate":$gateJson,"fit_memo":"q230 rep 1 pays model fits; reps >= 2 price the store lifecycle only","sf":"$sfDir","reps":$reps}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"dispersion":$disp,"retried":$retr,"profile":$prof,"loadavg":$loads,"start_loadavg":$startL,"retry_loadavg":${f2(loadavg())},"load_gate":$gateJson,"sf":"$sfDir","reps":$reps}"""
     println(line)
     // the driver's captured tail truncates long JSON lines (BENCH_r06
     // kept only q36-q99) — also write the full per-query artifact to a

@@ -11,10 +11,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Tuning {
 
-  /** Local / CI profile: small shuffle fan-out, AQE on (default). */
-  def local(spark: SparkSession, partitions: Int = 32): Unit =
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
-
   /** Large-cluster batch profile. Partition count should be sized to
     * ~128-256MB of shuffle data per task; AQE coalesces down from it.
     */

@@ -1831,58 +1831,44 @@ sig AS (SELECT doc_id,
           .otherwise(lit("")))
       val batt = concat(piiPlant, lit(" "), col("lang"),
         lit(" "), col("lang"), lit(" "), col("lang"))
-      // the seven fits + the two frozen indexes are pure functions of
-      // the on-disk corpus — memoized per (query, sfDir, corpus stamp)
-      // like q230's store battery (VERDICT-r15 item 5), so bench rep 1
-      // pays the trainers and reps >= 2 price the funnel projection.
-      // The memo holds localCheckpoint-backed frames, so it rides the
-      // session-aware memo (keyed on applicationId; a fresh session
-      // evicts the dead session's entries and refits).
-      val (corpus, m, gate, index, langNb, mediaIx) = fitOnceSession[(
-          org.apache.spark.sql.DataFrame, graft.scoring.Trainer.LogisticModel,
-          graft.scale.Perplexity.Gate, org.apache.spark.sql.DataFrame,
-          graft.scale.LangId.LangNb, org.apache.spark.sql.DataFrame)](
-          "q294_fits", s, dir) {
-        val corpus = docsSpread(s, dir)
-          .select(col("doc_id"), col("source"), col("lang"), batt.as("text"))
-          .localCheckpoint() // fits + serve: stats, 6 GD passes, lm, index
-        val t = col("text")
-        val y = when(TextOps.nTokens(t) < 20, 0L)
-          .when(TextOps.stopwordRatio(t) < 0.05, 0L).otherwise(1L)
-        // the five fit/index chains are independent functions of the
-        // shared corpus checkpoint — run them concurrently (guide §2.6);
-        // each chain's job sequence and fitted values are unchanged.
-        // mediaIx: the frozen media-payload fingerprint index (q296
-        // grain) — the surrogate payload collapses ids ≡ 0 (mod 3) onto
-        // 5 shared templates, so a delta doc (id % 30 == 0) re-posts an
-        // indexed payload and the fixture discriminates
-        val fits = parAll(Seq(
-          () => {
-            val f = TextOps.hashedNgramFeatures(corpus, col("doc_id"), t, B)
-              .join(corpus.select(col("doc_id"), y.as("y")), "doc_id")
-              .localCheckpoint() // stats + 6 GD passes
-            graft.scoring.Trainer.fitLogistic(
-              f.where(Splits.bucket(col("doc_id"), "hq", 5) =!= 0),
-              (0 until B).map(b => s"f$b"), col("y"), iters = 6, lr = 0.5)
-          },
-          () => graft.scale.Perplexity.fitGate(
-            corpus.select(col("doc_id"), col("source"), t)),
-          () => NearDupGate.buildIndex(
-            corpus.where(col("doc_id") % 10 =!= 0), col("doc_id"), t)
-            .localCheckpoint(),
-          () => graft.scale.LangId.fit(corpus, col("doc_id"), t,
-            col("lang"), Splits.bucket(col("doc_id"), "lid", 5) =!= 0,
-            buckets = 64),
-          () => corpus.where(col("doc_id") % 10 =!= 0)
-            .select(md5(mediaPayload).as("media_fp")).distinct()
-            .localCheckpoint()))
-        (corpus, fits(0).asInstanceOf[graft.scoring.Trainer.LogisticModel],
-          fits(1).asInstanceOf[graft.scale.Perplexity.Gate],
-          fits(2).asInstanceOf[org.apache.spark.sql.DataFrame],
-          fits(3).asInstanceOf[graft.scale.LangId.LangNb],
-          fits(4).asInstanceOf[org.apache.spark.sql.DataFrame])
-      }
+      val corpus = docsSpread(s, dir)
+        .select(col("doc_id"), col("source"), col("lang"), batt.as("text"))
+        .localCheckpoint() // fits + serve: stats, 6 GD passes, lm, index
       val t = col("text")
+      val y = when(TextOps.nTokens(t) < 20, 0L)
+        .when(TextOps.stopwordRatio(t) < 0.05, 0L).otherwise(1L)
+      // the five fit/index chains are independent functions of the
+      // shared corpus checkpoint — run them concurrently (guide §2.6);
+      // each chain's job sequence and fitted values are unchanged.
+      // mediaIx: the frozen media-payload fingerprint index (q296
+      // grain) — the surrogate payload collapses ids ≡ 0 (mod 3) onto
+      // 5 shared templates, so a delta doc (id % 30 == 0) re-posts an
+      // indexed payload and the fixture discriminates
+      val fits = parAll(Seq(
+        () => {
+          val f = TextOps.hashedNgramFeatures(corpus, col("doc_id"), t, B)
+            .join(corpus.select(col("doc_id"), y.as("y")), "doc_id")
+            .localCheckpoint() // stats + 6 GD passes
+          graft.scoring.Trainer.fitLogistic(
+            f.where(Splits.bucket(col("doc_id"), "hq", 5) =!= 0),
+            (0 until B).map(b => s"f$b"), col("y"), iters = 6, lr = 0.5)
+        },
+        () => graft.scale.Perplexity.fitGate(
+          corpus.select(col("doc_id"), col("source"), t)),
+        () => NearDupGate.buildIndex(
+          corpus.where(col("doc_id") % 10 =!= 0), col("doc_id"), t)
+          .localCheckpoint(),
+        () => graft.scale.LangId.fit(corpus, col("doc_id"), t,
+          col("lang"), Splits.bucket(col("doc_id"), "lid", 5) =!= 0,
+          buckets = 64),
+        () => corpus.where(col("doc_id") % 10 =!= 0)
+          .select(md5(mediaPayload).as("media_fp")).distinct()
+          .localCheckpoint()))
+      val m = fits(0).asInstanceOf[graft.scoring.Trainer.LogisticModel]
+      val gate = fits(1).asInstanceOf[graft.scale.Perplexity.Gate]
+      val index = fits(2).asInstanceOf[org.apache.spark.sql.DataFrame]
+      val langNb = fits(3).asInstanceOf[graft.scale.LangId.LangNb]
+      val mediaIx = fits(4).asInstanceOf[org.apache.spark.sql.DataFrame]
       val delta = corpus.where(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("source"), t).as[SourcedDoc]
       CurationCounters.batchTotals(CurationCounters.flaggedDocs(

@@ -3,7 +3,6 @@ package graft.tools
 import graft.ops.CoreFeatures
 import graft.scale.Dedup
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak: replicate the sf0.1 inputs k-fold in-plan (shifted keys ->
@@ -21,13 +20,7 @@ object Soak {
     val only: String => Boolean =
       if (args.length > 1) { val ps = args(1).split(','); n => ps.exists(n.startsWith) }
       else _ => true
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     def time(name: String)(f: => Unit): Unit = if (only(name)) {

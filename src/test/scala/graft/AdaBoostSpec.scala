@@ -1,7 +1,6 @@
 package graft
 
 import graft.scoring.{AdaBoost, KMeansOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * same stumps, same weighted errors, same vote chain.
   */
 class AdaBoostSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   // noisy two-feature labels: learnable but not separable, so every
   // round's best weighted error stays inside (0, 0.5)

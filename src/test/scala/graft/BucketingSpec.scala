@@ -1,8 +1,8 @@
 package graft
 
+import graft.plans.Tuning
 import graft.sources.Bucketing
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,24 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * time, then every entity-keyed join plans with zero Exchange.
   */
 class BucketingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   /** Force the non-broadcast strategy only within `f` — the session is
     * shared across suites, so a builder-level conf would leak and break
     * the broadcast-asserting PlanSpec tests.
     */
-  private def withNoBroadcast[A](f: => A): A = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try f finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
+  private def withNoBroadcast[A](f: => A): A =
+    Tuning.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
 
   /** The in-memory catalog forgets managed tables between JVM runs but
     * their warehouse directories survive — saveAsTable then fails with

@@ -1,18 +1,13 @@
 package graft
 
 import graft.ops.Centrality
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand-computed oracle for Brandes betweenness + closeness on the path
   * graph m1–c1–m2–c2–m3 (networkx-normalized conventions).
   */
 class CentralitySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Components
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The adaptive CC's contract: min-vertex-id labels, identical from the
@@ -9,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reachability on random graphs.
   */
 class ComponentsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   private def bruteForce(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }

@@ -2,19 +2,13 @@ package graft
 
 import graft.ops.{CoreFeatures, Trailing}
 import graft.scoring.Risk
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
 /** Hand-computed fixtures for the SURVEY §4.3 semantic traps. */
 class CoreFeaturesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   import spark.implicits._
 

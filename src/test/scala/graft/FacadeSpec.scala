@@ -1,7 +1,6 @@
 package graft
 
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * composed lazy plan.
   */
 class FacadeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   test("backfill -> snapshot -> predict round trip with cold-start defaults") {
     import spark.implicits._

@@ -1,18 +1,12 @@
 package graft
 
 import graft.feedback.{Drift, FeedbackStore}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 class FeedbackSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   test("feedback lifecycle: simulate -> persist -> date filter -> accuracy/retrain") {
     val dir = Files.createTempDirectory("graft_fb").toString

@@ -3,17 +3,11 @@ package graft
 import graft.functions.GraftFunctions
 import graft.ops.{CoreFeatures, Trailing}
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class FunctionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   test("r6 zero-sign convention: negative values rounding to zero emit -0.0") {
     // DuckDB's round() and the driver-side r6d both preserve the sign of

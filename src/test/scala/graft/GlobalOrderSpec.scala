@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.GlobalOrder
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -17,12 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition-less WindowExec.
   */
 class GlobalOrderSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
   import spark.implicits._
 
   // skewed doubles with heavy ties + a unique tie-break id

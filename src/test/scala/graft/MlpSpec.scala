@@ -1,7 +1,6 @@
 package graft
 
 import graft.scoring.{KMeansOps, Mlp}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rationals) and the layer-boundary rounding contract.
   */
 class MlpSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   test("deterministic net: dyadic weights, exact shapes") {
     val net = Mlp.deterministic(d = 64, hidden = 8)

@@ -2,7 +2,7 @@ package graft
 
 import graft.scale.Packing
 import graft.scoring.{KMeansOps, Lime, Models}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * convergence/determinism, and concat-and-chunk packing offsets.
   */
 class ModelsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   test("naiveBayesDelta reproduces the hand-computed smoothed log-odds") {
     import spark.implicits._

@@ -3,7 +3,6 @@ package graft
 import graft.ops.{MultiWindow, Trailing}
 import graft.schema.FeatureViews
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * for the float features (running add/evict sums vs frame re-scan).
   */
 class MultiWindowSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   // the PRODUCT window path (facade default), not a private re-derivation —
   // a regression in fullFeatures must fail this spec

@@ -2,7 +2,6 @@ package graft
 
 import graft.queries.OlapQueries
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * band predicate as a post-condition — not a nested-loop product.
   */
 class OlapSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -5,7 +5,6 @@ import graft.sources.Generator
 import graft.streaming.{CustomerFeatureProcessor, StreamFeatures, StreamTxn, StreamingFeatures}
 import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -17,14 +16,7 @@ import scala.util.Random
   * online snapshot -> point lookup with TTL.
   */
 class OnlineSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   test("generator burst -> streaming features -> snapshot upsert -> TTL lookup") {
     import spark.implicits._

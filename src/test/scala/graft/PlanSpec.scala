@@ -1,8 +1,8 @@
 package graft
 
+import graft.plans.Tuning
 import graft.queries.{CoreQueries, PipelineQueries, RelationalQueries}
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cost exactly one exchange on the entity key.
   */
 class PlanSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -188,9 +183,7 @@ class PlanSpec extends AnyFunSuite {
     // auto-broadcast threshold off, only an explicit hint could broadcast
     // an equi-join — so the k-join must plan as a shuffle join; the 1-row
     // population aggregate keeps its explicit broadcast (nested-loop cross).
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Tuning.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val tx = Tables.transactions(spark, sf)
       val p = plan(graft.ops.Behavioral.profile(
         tx, col("customer_id"), col("amount"), col("merchant_id")))
@@ -203,13 +196,11 @@ class PlanSpec extends AnyFunSuite {
         s"expected a shuffle join on the entity key:\n$p")
       assert(p.contains("BroadcastNestedLoopJoin"),
         s"1-row population aggregate should still broadcast:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("tf-idf df join: word vocab broadcasts; over-threshold vocab falls back to shuffle join") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Tuning.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val docs = Tables.documents(spark, sf)
       val small = plan(graft.scale.TextOps.tfidfTopK(docs, col("doc_id"), col("text"), 3))
       assert(small.contains("BroadcastHashJoin"),
@@ -220,19 +211,17 @@ class PlanSpec extends AnyFunSuite {
         s"over-threshold vocab must not broadcast:\n$big")
       assert(big.contains("SortMergeJoin") || big.contains("ShuffledHashJoin"),
         s"expected a term-keyed shuffle join:\n$big")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("cell-partitioned q44 join shuffles on BOTH cell coordinates") {
     // disable auto-broadcast so the cluster-scale plan shape materializes
     // (at real corpus scale neither side broadcasts)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Tuning.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan(graft.queries.ScaleQueries.defs("q44_embedding_dups")(spark, sf))
       assert("hashpartitioning\\(ci#\\d+, cj#\\d+".r.findFirstIn(p).isDefined,
         s"expected (ci, cj) cell-keyed exchange:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("naive bayes: model tables broadcast; the scored side never shuffle-joins") {

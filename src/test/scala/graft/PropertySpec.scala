@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.Distribution
 import graft.streaming.{CustomerFeatureProcessor, StreamTxn}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -18,12 +17,7 @@ class PropertySpec extends AnyFunSuite {
     * offline classpath) */
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (1 to n).map(i => g.apply(Gen.Parameters.default, Seed(42L + i)).get)
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   import spark.implicits._
 
@@ -74,8 +68,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("the ACTUAL transformWithState operator == batch windows on random sequences") {
-    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocks)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     samples(Gen.listOfN(80, txnGen), 3).foreach { txns =>
       val sorted = txns.sortBy(_.ts_micros).toIndexedSeq

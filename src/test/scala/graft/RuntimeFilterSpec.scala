@@ -2,7 +2,6 @@ package graft
 
 import graft.plans.Tuning
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * behavior is observable on test data.
   */
 class RuntimeFilterSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   private val sf = "/root/testdata/sf0.01"
 

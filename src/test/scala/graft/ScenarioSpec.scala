@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.CoreFeatures
 import graft.scoring.Risk
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
@@ -12,12 +11,7 @@ import java.sql.Timestamp
   * normal, burst, high amount, multi-IP, night activity.
   */
 class ScenarioSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   import spark.implicits._
 

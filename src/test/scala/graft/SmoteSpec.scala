@@ -1,7 +1,6 @@
 package graft
 
 import graft.scale.{Smote, Splits}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * neighbor really is the md5-drawn rank within the parent's shard.
   */
 class SmoteSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   private def minority = {
     import spark.implicits._

@@ -4,7 +4,6 @@ import graft.functions.GraftFunctions
 import graft.schema.FeatureViews
 import graft.ops.Trailing
 import graft.tables.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tracks the exact one.
   */
 class SqlInterfaceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   test("spark.sql over temp views with the native aggregate matches the DataFrame API") {
     GraftFunctions.register(spark)

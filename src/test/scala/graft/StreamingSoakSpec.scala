@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{MarkovScore, StreamingFeatures, StreamTxn, StreamTxnTs}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * restarted query must keep producing batch-correct features.
   */
 class StreamingSoakSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   private val T0 = java.sql.Timestamp.valueOf("2024-01-10 12:00:00").getTime // ms
 

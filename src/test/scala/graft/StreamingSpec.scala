@@ -3,7 +3,7 @@ package graft
 import graft.ops.CoreFeatures
 import graft.streaming.{MarkovScore, StreamTxn, StreamingFeatures}
 import graft.tables.Tables
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator on the same events (SURVEY §2.9).
   */
 class StreamingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   test("StreamConv.cents matches batch round() on negatives (HALF_UP, not toward +inf)") {
     import org.apache.spark.sql.functions.{col, lit, round}

@@ -1,7 +1,6 @@
 package graft
 
 import graft.scoring.Trainer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * runs, and handle degenerate columns without dividing by zero.
   */
 class TrainerSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   // y = 1 iff x1 > 0 (deterministic, linearly separable); x2 is an
   // independent deterministic distractor, x3 is constant

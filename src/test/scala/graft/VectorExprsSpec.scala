@@ -1,8 +1,8 @@
 package graft
 
 import graft.functions.GraftFunctions
+import graft.plans.Tuning
 import graft.scale.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in BOTH evaluation modes, or the oracle hash-compare would drift.
   */
 class VectorExprsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = Session.local(4)
 
   private def vecs = {
     import spark.implicits._
@@ -45,13 +40,11 @@ class VectorExprsSpec extends AnyFunSuite {
 
   test("codegen kernels are bit-identical to the higher-order forms") {
     val e = hof(vecs).collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))
-    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", mode)
-      try {
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN"))
+      Tuning.withConf(spark, "spark.sql.codegen.factoryMode" -> mode) {
         val a = native(vecs).collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))
         assert(a.toSeq == e.toSeq, s"mode=$mode")
-      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
-    }
+      }
   }
 
   test("mixed float/double argument types widen correctly") {
