@@ -3,7 +3,9 @@
 # usage: scripts/run.sh <mainClass> [args...]   (e.g. graft.Verify /root/testdata/sf0.01 /tmp/out)
 set -euo pipefail
 cd "$(dirname "$0")/.."
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# src/main/resources carries the mains' log4j2.properties (`sbt compile`
+# does not copy resources into target/)
+CP="target/scala-2.13/classes:src/main/resources:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \

@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   *   - streaming per-event features    (`flink_job/aml_stream_processor.py`)
   *
   * Every method returns a lazy DataFrame/Dataset — callers compose and
-  * Catalyst plans the whole pipeline as one job.
+  * Catalyst plans the whole pipeline as one job. [[fullFeatures]] is
+  * not fully lazy: its kernel reads its sorted input as an RDD, so the
+  * call itself runs that input's shuffle map stage.
   */
 class AmlFeatureStore(spark: SparkSession) {
 
@@ -34,17 +36,13 @@ class AmlFeatureStore(spark: SparkSession) {
   /** Merchant-entity view (A9/A10). */
   def merchantFeatures(tx: DataFrame): DataFrame = CoreFeatures.merchantFeatures(tx)
 
-  /** The full 12-kind × 6-window backfill. `onePass = true` switches from
-    * the window-function plan to the incremental kernel
-    * ([[graft.ops.MultiWindow]]): same partitioning contract, amortized
-    * O(windows) per event instead of O(frame × kinds) — measured 3x faster
-    * at sf0.1 and the gap widens with frame size. The window form is the
-    * oracle-exact default; the kernel is property-tested against it
-    * (MultiWindowSpec) with float agreement to 1e-9.
+  /** The full 12-kind × 6-window backfill (72 features per event), from
+    * one incremental pass per customer ([[graft.ops.MultiWindow]]). Equal,
+    * bit for bit, to the window-function form
+    * ([[graft.schema.FeatureViews.windowView]]), against which
+    * MultiWindowSpec checks it; q37 runs it under the oracle.
     */
-  def fullFeatures(tx: DataFrame, onePass: Boolean = false): DataFrame =
-    if (onePass) graft.ops.MultiWindow.fullViewOnePass(tx)
-    else graft.schema.FeatureViews.windowView(tx)
+  def fullFeatures(tx: DataFrame): DataFrame = graft.ops.MultiWindow.fullView(tx)
 
   /** Online store: latest feature row per customer within `ttlSeconds` of
     * `now` — the relational form of the reference's Redis hash + EXPIRE.

@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   * `partitionBy(key).orderBy(unix_micros(ts))` spec, so Catalyst plans a
   * single Exchange + single Sort for any number of window lengths and
   * aggregates — 10 windows cost one shuffle. At 100 TB the shuffle is on
-  * the entity key (same key the online pipeline partitions by), and AQE
-  * handles skewed hot keys.
+  * the entity key (same key the online pipeline partitions by). A hot key
+  * stays in one task: AQE splits skewed partitions of joins only, not of
+  * window or aggregate stages.
   */
 object Trailing {
   /** Canonical window spec for one entity key ordered by event time. */

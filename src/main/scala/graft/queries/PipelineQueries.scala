@@ -166,8 +166,7 @@ object PipelineQueries extends QueryPack {
           r6(col("graph_betweenness_centrality")).as("graph_betweenness_centrality"))
     },
     "q37_full_features" -> { (s, dir) =>
-      // the shared windowView + oracle rounding; the two projections
-      // collapse into one, so the plan (and its bits) are unchanged
+      // fullFeatures' kernel + oracle rounding
       val roundCols = for {
         (wName, _) <- FeatureViews.windows6
         kind <- FeatureViews.kinds
@@ -175,7 +174,7 @@ object PipelineQueries extends QueryPack {
         val named = kind.featureName(wName)
         (if (kind.double) r6(col(named)) else col(named)).as(named)
       }
-      FeatureViews.windowView(Tables.transactions(s, dir))
+      graft.ops.MultiWindow.fullView(Tables.transactions(s, dir))
         .select(col("transaction_id") +: col("customer_id") +: roundCols: _*)
     })
 

@@ -76,8 +76,9 @@ object FeatureViews {
   }
 
   /** The full 12-kind × 6-window view as ONE window-function plan (no
-    * rounding) — the single source for the facade, the q37 oracle query,
-    * and the kernel's equivalence spec.
+    * rounding): the reference form that [[graft.ops.MultiWindow]], the
+    * path every caller runs, is checked against (MultiWindowSpec,
+    * `tools.Soak`).
     */
   def windowView(tx: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val w = Trailing.spec(col("customer_id"), col("event_timestamp"))

@@ -11,11 +11,7 @@ object Timing {
     val qs = if (args.nonEmpty) args.toSeq else Seq("q01_txn_counts")
     for (q <- qs; rep <- 1 to 3) {
       val t0 = System.nanoTime()
-      val df =
-        if (q == "kernel37") // one-pass kernel vs the q37 window form
-          graft.ops.MultiWindow.fullViewOnePass(graft.tables.Tables.transactions(spark, dir))
-        else graft.SparkEntry.queries(q)(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
+      graft.SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
       println(f"$q rep$rep ${(System.nanoTime() - t0) / 1e9}%.2f")
     }
     spark.stop()

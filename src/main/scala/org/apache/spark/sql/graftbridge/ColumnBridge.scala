@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Minimal `private[sql]` bridge: Spark 4 backs `Column` by ColumnNode
   * (Connect unification) and hid the Expression<->Column conversions
@@ -39,4 +42,13 @@ object ColumnBridge {
   def intDiv(a: Column, b: Column): Column =
     column(new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
       expression(a), expression(b)))
+
+  /** A DataFrame over rows already in Catalyst's internal form, which
+    * `schema` describes — for kernels that work on `InternalRow`s and
+    * would otherwise pay an encoder round trip per row.
+    */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }
