@@ -1,4 +1,5 @@
 package graft
+import graft.tools.RunProfile
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** One query's measurement: median/min/max of the rep loop (-1 = a
@@ -32,8 +33,9 @@ object Bench {
     * ~W/suite-wall queries and the median absorbs it.
     *
     * `run` returns elapsed seconds or a negative sentinel on failure; a
-    * failed item skips its remaining reps and records -1 (same contract
-    * as the consecutive loop). Returns items in input order.
+    * failed item skips its remaining reps and records -1. Returns items
+    * in input order. With one item the reps run back to back (the
+    * end-of-run retry).
     */
   def runInterleaved[T](items: Seq[T], reps: Int)(run: (T, Int) => Double)
       : Seq[(T, QBench)] = {
@@ -211,51 +213,20 @@ object Bench {
     // per-query scheduler-level counters NEXT TO wall (VERDICT-r16 item
     // 3: at sf0.1 the suite is scheduling-bound — median 8->32-core
     // ratio 1.05 — so wall alone cannot see a shuffle-level win; Σ task
-    // time and shuffle bytes can). A SparkListener accumulates across
-    // each timed run; the bus is drained at the run boundary
-    // (ListenerBridge) so attribution is exact. Purely additive
-    // measurement: the timing loop, rep policy and every existing JSON
-    // key are unchanged.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val shufW = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            taskMs.addAndGet(m.executorRunTime)
-            shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      })
-    val profiles = scala.collection.mutable.Map.empty[String,
-      List[(Double, Double)]] // (task seconds, shuffle-write MB) per run
+    // time and shuffle bytes can). RunProfile drains the listener bus at
+    // each run boundary, so attribution is exact.
+    val prof = RunProfile(spark)
+    val profiles = scala.collection.mutable.Map.empty[String, List[RunProfile.Run]]
     def timeOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      val (m0, s0) = (taskMs.get, shufW.get)
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        profiles(name) = ((taskMs.get - m0) / 1000.0,
-          (shufW.get - s0) / 1048576.0) :: profiles.getOrElse(name, Nil)
-        wall
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      try {
+        val r = prof.measure(
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        profiles(name) = r :: profiles.getOrElse(name, Nil)
+        r.wallSec
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
-    }
-    def measure(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QBench = {
-      // consecutive reps — used only for the end-of-run retry of a
-      // single suspect (interleaving is meaningless for one query)
-      val times = Iterator.range(0, reps).map(_ => timeOne(name, fn))
-        .takeWhile(_ >= 0).toSeq // first failure poisons the query: -1
-      val ok = times.size == reps
-      QBench(if (ok) times.sorted.apply(reps / 2) else -1.0,
-        if (ok) times.min else -1.0, if (ok) times.max else -1.0)
-    }
     // main pass: INTERLEAVED rep rounds (see runInterleaved), with the
     // 1-min loadavg stamped at each round boundary
     val repLoads = Array.fill(reps)(-1.0)
@@ -274,7 +245,9 @@ object Bench {
       case (name, fn, first) if spreadExceeds(first) =>
         System.err.println(s"[bench] $name spread ${f2(first.max / first.min)}x" +
           " > 3x: retrying at end of run")
-        name -> ((first, measure(name, fn)))
+        // one item: its reps run consecutively
+        val retry = runInterleaved(Seq(fn), reps)((g, _) => timeOne(name, g))
+        name -> ((first, retry.head._2))
     }.toMap
     val results = firsts.map { case (name, _, first) =>
       name -> retried.get(name).map { case (a, b) => adopt(a, b) }.getOrElse(first)
@@ -292,20 +265,16 @@ object Bench {
       s"\"" + k +
         s"""\":{"first":${f(a.med)},"retry":${f(b.med)},"adopted":${f(adopt(a, b).med)}}""" }
       .mkString("{", ",", "}")
-    // median Σ task seconds / shuffle-write MB across the recorded runs
-    // (medians are taken per counter — the profile is attribution
-    // context, not a paired sample of one rep)
-    def medOf(xs: Seq[Double]): Double =
-      if (xs.isEmpty) -1.0 else xs.sorted.apply(xs.size / 2)
-    val prof = results.map { case (k, _) =>
-      val runs = profiles.getOrElse(k, Nil)
-      s"\"" + k + s"""\":{"task_sec":${f(medOf(runs.map(_._1)))},"shuf_mb":${f(medOf(runs.map(_._2)))}}"""
+    // each RunProfile field's median across the recorded runs (retry
+    // runs included)
+    val profJson = results.map { case (k, _) => s"\"" + k + "\":" +
+      RunProfile.render(RunProfile.median(profiles.getOrElse(k, Nil)), json = true)
     }.mkString("{", ",", "}")
     val total = results.map(_._2.med).filter(_ >= 0).sum
     val loads = repLoads.map(f2).mkString("[", ",", "]") // per rep round
     val gateJson = loadGate.map(g => f2(g)).getOrElse("null")
     val startL = startLoad.map(f2).mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"dispersion":$disp,"retried":$retr,"profile":$prof,"loadavg":$loads,"start_loadavg":$startL,"retry_loadavg":${f2(loadavg())},"load_gate":$gateJson,"sf":"$sfDir","reps":$reps}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"dispersion":$disp,"retried":$retr,"profile":$profJson,"loadavg":$loads,"start_loadavg":$startL,"retry_loadavg":${f2(loadavg())},"load_gate":$gateJson,"sf":"$sfDir","reps":$reps}"""
     println(line)
     // the driver's captured tail truncates long JSON lines (BENCH_r06
     // kept only q36-q99) — also write the full per-query artifact to a

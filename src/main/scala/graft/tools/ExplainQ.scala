@@ -1,7 +1,7 @@
 package graft.tools
 
 /** Print the formatted physical plan of registered queries (plan-audit
-  * companion to [[Timing]]; not part of the driver contract).
+  * companion to [[Profile]]; an investigation tool, not a gate).
   */
 object ExplainQ {
   def main(args: Array[String]): Unit = {

@@ -499,14 +499,14 @@ object Soak {
     // skew-join cannot fix: it is one GROUP, not one partition, that is
     // hot). The map-side <= k buffers must collapse the hot group in
     // every task, so the exchange carries ~tasks x groups x k rows no
-    // matter how skewed the group sizes are — measured via a listener.
+    // matter how skewed the group sizes are — measured by RunProfile.
     time(s"topk-skew-${k}x-candidates") {
       val nQ = 64
       val rowsPer = 100000L * k
       // query 0 owns ~50% of all candidates; 63 queries share the rest
       // spark.range is already spread over the default parallelism and
       // id % 2 == 0 puts hot-group rows in EVERY partition — no
-      // repartition, so the only exchange the listener sees is the
+      // repartition, so the only exchange RunProfile sees is the
       // aggregate's
       val cands = spark.range(rowsPer).select(
           when(col("id") % 2 === 0, 0L).otherwise(col("id") % (nQ - 1) + 1L)
@@ -514,23 +514,13 @@ object Soak {
           col("id").as("cand_id"),
           (pmod(col("id") * 2654435761L, lit(1000000L)).cast("double") / 1e4)
             .as("score"))
-      val wrec = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) wrec.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        graft.ops.TopK.byGroup(cands, Seq("query_id"), "score",
-            asc = false, "cand_id", 10)
-          .write.format("noop").mode("overwrite").save()
-        Thread.sleep(2000) // listener bus drains async
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val r = RunProfile(spark).measure(graft.ops.TopK.byGroup(cands,
+          Seq("query_id"), "score", asc = false, "cand_id", 10)
+        .write.format("noop").mode("overwrite").save())
       println(f"  ${rowsPer} candidates (50%% in one group) -> " +
-        f"${wrec.get()} exchanged rows (bound: tasks x $nQ groups x k=10)")
+        f"${r.shufRecords} exchanged rows (bound: ${r.tasks} tasks x $nQ groups x k=10)")
+      require(r.shufRecords <= r.tasks * nQ * 10,
+        "the map-side top-k buffers must bound the exchange")
     }
 
     time(s"semgate-index-${k}x-vectors") {

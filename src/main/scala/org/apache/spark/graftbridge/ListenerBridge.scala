@@ -3,10 +3,10 @@ package org.apache.spark.graftbridge
 import org.apache.spark.SparkContext
 
 /** Minimal `private[spark]` bridge: the async listener bus exposes its
-  * drain (`waitUntilEmpty`) only inside `org.apache.spark`. Bench's
-  * per-query scheduler counters (Σ task time, shuffle bytes) need the
-  * bus drained at each query boundary or late-arriving task-end events
-  * leak into the next query's attribution — same package-in-spark
+  * drain (`waitUntilEmpty`) only inside `org.apache.spark`.
+  * [[graft.tools.RunProfile]] drains the bus on both sides of each
+  * measured run, or late-arriving task-end events would leak into the
+  * next run's counters — same package-in-spark
   * technique as [[org.apache.spark.sql.graftbridge.ColumnBridge]].
   */
 object ListenerBridge {

@@ -57,6 +57,14 @@ class BenchSpec extends AnyFunSuite {
     assert(m("q3") == QBench(2.1, 2.0, 2.2))
     // input order preserved for the artifact
     assert(out.map(_._1) == Seq("q1", "q2", "q3"))
+    // one item (the end-of-run retry): reps run back to back, a failure
+    // at rep 2 poisons the query and rep 3 never runs
+    val solo = collection.mutable.ArrayBuffer[Int]()
+    val one = runInterleaved(Seq("q4"), 3) { (_, r) =>
+      solo += r; if (r == 1) -1.0 else 1.0
+    }
+    assert(solo.toSeq == Seq(0, 1))
+    assert(one == Seq("q4" -> QBench(-1.0, -1.0, -1.0)))
   }
 
   test("waitForLoad: passes when quiet or unmeasurable, waits out a spike, refuses a persistent load") {
