@@ -1,10 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB oracle compare (scripts/check.py).
-  * Exits 1 when any query failed, after listing the failed names in
-  * failures.json. */
+  * A query fails when it throws or when it leaves an entry in the
+  * session's CacheManager. Exits 1 when any query failed, after listing
+  * the failed names in failures.json. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -29,9 +31,17 @@ object Verify {
       qs: Map[String, queries.Q], oracle: Map[String, String]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
     val failed = qs.toSeq.flatMap { case (name, fn) =>
+      val before = ColumnBridge.cachedEntries(spark)
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        None
+        val left = ColumnBridge.cachedEntries(spark) - before
+        if (left <= 0) None
+        else {
+          System.err.println(s"[verify] $name failed: left $left CacheManager entries")
+          // drop them so the next query is checked from the same state
+          spark.catalog.clearCache()
+          Some(name)
+        }
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         Some(name)

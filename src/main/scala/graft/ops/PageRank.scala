@@ -36,7 +36,7 @@ object PageRank {
     val labels = ed.select(col("src").as("label"))
       .union(ed.select(col("dst").as("label"))).distinct()
       .as[String].rdd.sortBy(identity).zipWithIndex().toDF("label", "vid")
-      .cache()
+      .localCheckpoint()
     val vedges = ed
       .join(labels.withColumnRenamed("label", "src"), "src")
       .withColumnRenamed("vid", "svid")
@@ -47,13 +47,10 @@ object PageRank {
       .partitionBy(PartitionStrategy.EdgePartition2D)
     val ranks = graph.staticPageRank(iters, resetProb = 1.0 - damping).vertices
     // Pregel already materialized the ranks; checkpoint the (node-sized)
-    // result so the labels cache can be released instead of leaking into
-    // the session for every call
-    val out = ranks.toDF("vid", "pr").join(labels, "vid")
+    // result so it no longer reads the graph's lineage
+    ranks.toDF("vid", "pr").join(labels, "vid")
       .select(col("label").as("node"), col("pr"))
       .localCheckpoint()
-    labels.unpersist(false)
-    out
   }
 
   /** Catalyst-loop twin of [[run]] — identical values (to summation
@@ -64,7 +61,7 @@ object PageRank {
   def runDataFrame(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
     val ed = edges.select(col("src"), col("dst"))
     val deg = ed.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-    val withDeg = ed.join(deg, "src").cache()
+    val withDeg = ed.join(deg, "src").localCheckpoint()
 
     var ranks = deg.select(col("src").as("node"), lit(1.0).as("pr"))
     for (_ <- 1 to iters) {
@@ -76,7 +73,6 @@ object PageRank {
           (lit(1.0 - damping) + lit(damping) * col("mass")).as("pr"))
         .localCheckpoint() // truncate lineage; see class doc
     }
-    withDeg.unpersist(false)
     ranks
   }
 
@@ -95,13 +91,13 @@ object PageRank {
                    damping: Double = 0.85): DataFrame = {
     val ed = edges.select(col("src"), col("dst"))
     val deg = ed.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-    val withDeg = ed.join(deg, "src").cache()
+    val withDeg = ed.join(deg, "src").localCheckpoint()
     // symmetrized edges: every node is some src
     val seedTbl = deg.select(col("src").as("node"))
       .join(seeds.select(col("node")).distinct().withColumn("s", lit(1.0)),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("s"), lit(0.0)).as("seed"))
-      .cache()
+      .localCheckpoint()
     var ranks = seedTbl.select(col("node"), col("seed").as("pr"))
     for (_ <- 1 to iters) {
       val mass = withDeg
@@ -116,11 +112,8 @@ object PageRank {
         .select(col("node"), col("pr"))
         .localCheckpoint()
     }
-    withDeg.unpersist(false)
-    val out = seedTbl.join(ranks, "node")
+    seedTbl.join(ranks, "node")
       .select(col("node"), (col("seed") > 0).as("is_seed"), col("pr"))
-    seedTbl.unpersist(false)
-    out
   }
 
   /** Unrolled DuckDB oracle for [[personalized]]. */

@@ -94,21 +94,44 @@ package object queries {
     * sequential form while one chain's stage tails back-fill the
     * executors the other chains leave idle. Threads are daemons created
     * per call (arity-bounded — 2..6 chains at the call sites, never
-    * data-sized); failures propagate the original exception.
+    * data-sized).
+    *
+    * Every job a chain runs carries one job tag unique to the call. The
+    * first chain to fail, in completion order, fails the call: its
+    * original exception is rethrown once the other chains' threads are
+    * interrupted and their running jobs cancelled by that tag.
     */
   private[queries] def parAll(tasks: Seq[() => Any]): Seq[Any] = {
     require(tasks.nonEmpty)
     if (tasks.size == 1) return Seq(tasks.head())
-    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    import java.util.concurrent.{Callable, ExecutionException,
+      ExecutorCompletionService, Executors, TimeUnit}
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
     val pool = Executors.newFixedThreadPool(tasks.size,
       (r: Runnable) => { val t = new Thread(r, "graft-par"); t.setDaemon(true); t })
+    val done = new ExecutorCompletionService[Any](pool)
     try {
-      val futs = tasks.map(t =>
-        pool.submit(new Callable[Any] { def call(): Any = t() }))
-      futs.map { f =>
-        try f.get()
-        catch { case e: ExecutionException => throw e.getCause }
+      val futs = tasks.map(t => done.submit(new Callable[Any] {
+        def call(): Any = {
+          sc.addJobTag(tag)
+          sc.setInterruptOnCancel(true)
+          t()
+        }
+      }))
+      tasks.foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException =>
+          sc.cancelJobsWithTag(tag)
+          pool.shutdownNow()
+          // a sibling between two jobs submits its next one before it
+          // sees the interrupt: cancel again once the threads are gone
+          pool.awaitTermination(30, TimeUnit.SECONDS)
+          sc.cancelJobsWithTag(tag)
+          throw e.getCause
+        }
       }
+      futs.map(_.get())
     } finally pool.shutdownNow()
   }
 

@@ -3,7 +3,6 @@ package graft.scale
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines: exact (hash),
   * n-gram Jaccard, MinHash+LSH, SimHash.
@@ -111,30 +110,31 @@ object Dedup {
   def jaccardTopK(docs: DataFrame, id: Column, text: Column, n: Int,
                   dfCut: Int, k: Int): DataFrame = {
     // ONE exchange builds the whole inverted index: narrow shingling,
-    // repartition by shingle, df-cut as a count-window that REUSES that
-    // partitioning (local sort only, no second exchange). Persisted
-    // because both sides of the self-join read it — and they read it
-    // exchange-free, already hash-partitioned on the join key.
-    val kept = shingles(docs, id, text, n)
+    // repartition by shingle, then the df-cut as a count-window and the
+    // posting lists as a groupBy(shingle), both REUSING that partitioning
+    // (local sorts only, no second exchange). The posting lists are
+    // checkpointed AFTER the groupBy because a checkpoint does not keep
+    // its input's hash partitioning: the set sizes and the pair
+    // expansion both read them and neither needs it.
+    val postings = shingles(docs, id, text, n)
       .repartition(col("shingle"))
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("shingle"))))
       .where(col("df") <= dfCut)
-      .select(col("doc_id"), col("shingle"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("shingle"))
+      .agg(sort_array(collect_set(col("doc_id"))).as("cs"))
+      .localCheckpoint()
     // post-cut set sizes: tiny (one row per doc) — joined onto the
     // AGGREGATED pair table, so AQE broadcasts them at test SF while the
     // same plan stays a shuffle join at corpus scale
-    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+    val sizes = postings.select(explode(col("cs")).as("doc_id"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // pair expansion per posting list instead of the inverted-index
     // self-join: the df-cut bounds every list at `dfCut` docs, so the
-    // C(df,2) expansion is a narrow map after a groupBy(shingle) that
-    // REUSES the partitioning `kept` already has — the self-join's probe
+    // C(df,2) expansion is a narrow map — the self-join's probe
     // exchanges disappear and the pair count partial-aggregates map-side.
     // Timed even with the codegen self-join at sf0.1 (~1.7 s both); kept
     // for the exchange profile, which is what matters at corpus scale.
-    kept.groupBy(col("shingle"))
-      .agg(sort_array(collect_set(col("doc_id"))).as("cs"))
-      .where(size(col("cs")) >= 2)
+    postings.where(size(col("cs")) >= 2)
       .select(explode(flatten(expr(
         """transform(cs, (x, i) ->
           |  transform(slice(cs, i + 2, size(cs)),
@@ -222,8 +222,8 @@ object Dedup {
     * collision) count with exact Jaccard 0.
     */
   def minhashCalibration(docs: DataFrame, id: Column, text: Column, n: Int): DataFrame = {
-    val sh = shingles(docs, id, text, n).persist(StorageLevel.MEMORY_AND_DISK)
-    val sig = minhashSignaturesFrom(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    val sh = shingles(docs, id, text, n).localCheckpoint()
+    val sig = minhashSignaturesFrom(sh).localCheckpoint()
     val cand = lshCandidates(sig)
     val matches = perms.indices.map(i =>
       when(col(s"s1.mh$i") === col(s"s2.mh$i"), 1).otherwise(0)).reduce(_ + _)
@@ -257,10 +257,10 @@ object Dedup {
   private def minhashPairStats(docs: DataFrame, id: Column, text: Column, n: Int): DataFrame = {
     // the shingle table feeds four consumers (signatures, both intersection
     // probes, sizes) and the signature table feeds both sides of the band
-    // self-join — persist both so tokenization+distinct run once, not 12x
+    // self-join — checkpoint both so tokenization runs once, not 12x
     // (at 100 TB this is the standard materialize-the-shingle-table step)
-    val sh = shingles(docs, id, text, n).persist(StorageLevel.MEMORY_AND_DISK)
-    val sig = minhashSignaturesFrom(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    val sh = shingles(docs, id, text, n).localCheckpoint()
+    val sig = minhashSignaturesFrom(sh).localCheckpoint()
     val cand = lshCandidates(sig)
     // intersection via composite-key equi-join (doc AND shingle) so no
     // per-pair shingle cross product materializes; AQE broadcasts the
@@ -315,8 +315,8 @@ object Dedup {
     */
   def incrementalDedup(index: DataFrame, delta: DataFrame, id: Column,
                        text: Column, n: Int, tau: Double): DataFrame = {
-    val shI = shingles(index, id, text, n).persist(StorageLevel.MEMORY_AND_DISK)
-    val shD = shingles(delta, id, text, n).persist(StorageLevel.MEMORY_AND_DISK)
+    val shI = shingles(index, id, text, n).localCheckpoint()
+    val shD = shingles(delta, id, text, n).localCheckpoint()
     def bandKeys(sig: DataFrame) = {
       val bandCols = bands.map(rows => concat_ws("_", rows.map(r => col(s"mh$r")): _*))
       sig.select(col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band", "key")))

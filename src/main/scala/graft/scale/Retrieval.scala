@@ -9,12 +9,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape — the classic inverted-index dataflow as joins:
   *   - the (doc, term, tfc) index is built in ONE tokenization pass and
-  *     materialized ([[tokenIndex]]): df / document lengths / corpus
+  *     checkpointed ([[tokenIndex]]): df / document lengths / corpus
   *     stats / query term sets are four derivations of it, and lazy
   *     subtrees would each re-run the corpus explode. This is not a
   *     test crutch — it IS the inverted-index build a production
-  *     retrieval system persists; swap `materializeIndex` for a parquet
-  *     write/read at real scale;
+  *     retrieval system persists;
   *   - the query term set is the EVAL set (a handful of queries), so
   *     the postings probe is a broadcast hash join on `term` touching
   *     exactly the matching posting lists, never the corpus — and it
@@ -48,16 +47,17 @@ object Retrieval {
   }
 
   /** One-pass (doc_id, term, tfc, is_q) token index build — the frame
-    * everything else derives from. `materializeIndex` defaults to a
-    * localCheckpoint so the corpus explode runs once.
+    * everything else derives from, checkpointed so the corpus explode
+    * runs once.
     */
-  def tokenIndex(docs: DataFrame, id: Column, text: Column, isQuery: Column,
-      materializeIndex: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+  def tokenIndex(docs: DataFrame, id: Column, text: Column,
+      isQuery: Column): DataFrame = {
     val base = docs.select(id.as("doc_id"), text.as("t"), isQuery.as("is_q"))
     val toks = base.select(col("doc_id"), col("is_q"),
       explode(regexp_extract_all(lower(col("t")), lit("\\S+"), lit(0))).as("term"))
-    materializeIndex(toks.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tfc"), first(col("is_q")).as("is_q")))
+    toks.groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("tfc"), first(col("is_q")).as("is_q"))
+      .localCheckpoint()
   }
 
   /** Okapi BM25 scored (query_id, doc_id, bm25) pairs from a prebuilt
@@ -117,9 +117,8 @@ object Retrieval {
 
   /** Convenience: [[tokenIndex]] + [[bm25PairsFromIndex]]. */
   def bm25Pairs(docs: DataFrame, id: Column, text: Column, isQuery: Column,
-      k1: Double = 1.2, b: Double = 0.75,
-      materializeIndex: DataFrame => DataFrame = _.localCheckpoint()): DataFrame =
-    bm25PairsFromIndex(tokenIndex(docs, id, text, isQuery, materializeIndex), k1, b)
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25PairsFromIndex(tokenIndex(docs, id, text, isQuery), k1, b)
 
   /** A STANDING BM25 query frozen for serving — the prospective-search /
     * alerting pattern: the query's pruned term set with per-term idf
@@ -176,9 +175,8 @@ object Retrieval {
     */
   def fitStanding(docs: DataFrame, id: Column, text: Column, isQuery: Column,
       topTerms: Int = 16, k1: Double = 1.2, b: Double = 0.75,
-      maxQueryTermRows: Int = 1000000,
-      materializeIndex: DataFrame => DataFrame = _.localCheckpoint()): Seq[StandingBm25] = {
-    val tf = tokenIndex(docs, id, text, isQuery, materializeIndex)
+      maxQueryTermRows: Int = 1000000): Seq[StandingBm25] = {
+    val tf = tokenIndex(docs, id, text, isQuery)
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tfc")).as("len"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val Array(st) = dl.agg(count(lit(1)).as("n"),

@@ -2,7 +2,6 @@ package graft.scale
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -501,7 +500,7 @@ object Similarity {
           slice(col("ce"), lit(1), col("d"))).as("cos"))
     val topk = topKByQuery(scored, "cos", asc = false, "nbr_id", k,
         partNames = Seq("query_id", "d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val full = topk.where(col("d") === fullDim)
       .select(col("query_id").as("fq"), col("nbr_id").as("fn"))
     topk.join(full, col("query_id") === col("fq") && col("nbr_id") === col("fn"),
@@ -558,7 +557,7 @@ object Similarity {
   def semDedupDelta(index: DataFrame, delta: DataFrame, k: Int, iters: Int,
                     tau: Double): DataFrame = {
     val cent = lloydCentroidsRounded(index, k, iters)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val ai = assign(index, cent)
       .select(col("cid"), col("vec_id").as("iid"), col("embedding").as("ie"),
         norm(col("embedding")).as("inrm"))
@@ -608,7 +607,7 @@ object Similarity {
   def semDedup(corpus: DataFrame, k: Int, iters: Int, tau: Double,
       withBestPrev: Boolean = false): DataFrame = {
     val assigned = lloydAssignRounded(corpus, k, iters)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     // norms once per vector, not once per cluster-mate pair: a pair
     // costs one ArrayDot + two divisions (the [[cosineDupPairs]] hoist;
     // division order unchanged, so the doubles are bit-identical)

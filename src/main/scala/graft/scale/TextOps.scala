@@ -73,7 +73,7 @@ object TextOps {
     * shuffle saved on the big tf side; an n-gram/shingle vocabulary can
     * reach billions of terms, where a forced broadcast is a guaranteed
     * OOM, so it falls back to a plain term-keyed shuffle join. The df
-    * table is cached so the sizing count and the join share one
+    * table is checkpointed so the sizing count and the join share one
     * aggregation.
     */
   def tfidfTopK(docs: org.apache.spark.sql.DataFrame, id: Column, text: Column,
@@ -84,7 +84,7 @@ object TextOps {
     val tf = toks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tfc"))
     val docLen = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("len"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val dfSide = if (df.count() <= maxBroadcastVocab) broadcast(df) else df
     val n = docs.select(id).agg(count(lit(1)).as("n"))
     val scored = tf.join(docLen, "doc_id").join(dfSide, "term").crossJoin(broadcast(n))
@@ -692,20 +692,18 @@ object TextOps {
     * broadcasts. Emits (group, n_tokens, vocab, kl) with `kl` RAW —
     * callers round to the engine quantum.
     *
-    * `materialize` pins the (source, term) counts once (default
-    * localCheckpoint — the [[graft.scale.Retrieval.tokenIndex]]
-    * discipline): ts/cc/tc and the final join are four consumers of the
-    * same aggregate, and relying on Catalyst exchange reuse alone would
-    * re-run the corpus explode if AQE re-plans any consumer.
+    * The (source, term) counts are checkpointed once (the
+    * [[graft.scale.Retrieval.tokenIndex]] discipline): ts/cc/tc and the
+    * final join are four consumers of the same aggregate, and relying on
+    * Catalyst exchange reuse alone would re-run the corpus explode if AQE
+    * re-plans any consumer.
     */
   def sourceUnigramKl(docs: org.apache.spark.sql.DataFrame, group: Column,
-      text: Column,
-      materialize: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        _.localCheckpoint()): org.apache.spark.sql.DataFrame = {
+      text: Column): org.apache.spark.sql.DataFrame = {
     val toks = docs.select(group.as("source"),
       explode(regexp_extract_all(lower(text), lit("\\S+"), lit(0))).as("term"))
-    val cs = materialize(
-      toks.groupBy(col("source"), col("term")).agg(count(lit(1)).as("c")))
+    val cs = toks.groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
+      .localCheckpoint()
     val ts = cs.groupBy(col("source")).agg(sum(col("c")).as("ts"))
     val cc = cs.groupBy(col("term")).agg(sum(col("c")).as("cc"))
     val tc = cc.agg(sum(col("cc")).as("tc"))

@@ -42,7 +42,7 @@ object Boosting {
   final case class Model(f0: Double, rate: Double, rounds: Seq[Stump])
 
   /** Fit `rounds` boosted stumps on `df` (numeric `features`, 0/1
-    * `label`). The caller should cache/checkpoint `df`: each round reads
+    * `label`). The caller should checkpoint `df`: each round reads
     * it once per feature for the distinct-value aggregate.
     */
   def fit(df: DataFrame, features: Seq[String], label: Column,
@@ -161,8 +161,8 @@ object Boosting {
       .otherwise(side(tr.rightFeature, tr.rightThreshold, 2, 3))
   }
 
-  /** Fit `rounds` boosted depth-2 trees. The caller should cache or
-    * checkpoint `df`: each round reads it twice per feature (root +
+  /** Fit `rounds` boosted depth-2 trees. The caller should checkpoint
+    * `df`: each round reads it twice per feature (root +
     * fused child pass). Every root side must admit a child split
     * (`require`d loudly, as in Trees.fitDepth2).
     */

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * reference notebook uses for segment discovery).
   *
   * Distributed shape: the points NEVER move. Each iteration scores the
-  * cached point table against k centroid LITERALS (zero shuffle — the
+  * checkpointed point table against k centroid LITERALS (zero shuffle — the
   * assignment is a `least(struct(dist, cid))` expression inside
   * whole-stage codegen) and reduces to k avg rows; only those k rows
   * reach the driver. At 10⁹ points an iteration is one map + one

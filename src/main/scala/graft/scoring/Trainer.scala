@@ -1,6 +1,6 @@
 package graft.scoring
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** In-engine trainable model: full-batch logistic regression by
@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * iteration is ONE partial-aggregated pass computing the (d+1)-gradient
   * vector; only that tiny vector ever reaches the driver. The data never
   * collects, never reshuffles after the initial projection, and the
-  * per-iteration cost is a map + combine over the cached standardized
-  * frame — at 100 TB with 1000 executors each step is a single
-  * tree-aggregate.
+  * per-iteration cost is a map + combine over the checkpointed
+  * standardized frame — at 100 TB with 1000 executors each step is a
+  * single tree-aggregate.
   *
   * Determinism: weights start at 0, steps are fixed-rate full-batch
   * (no sampling, no RNG anywhere); float summation-order noise across
@@ -30,6 +30,36 @@ object Trainer {
       features: Seq[String], means: Seq[Double], stds: Seq[Double],
       weights: Seq[Double], intercept: Double, iters: Int, lr: Double)
 
+  /** The frame every single-mask linear trainer iterates over. ONE stats
+    * pass over `train` computes each feature's population mean and
+    * stddev (a constant column gets stddev 1, so it contributes only to
+    * the intercept), with any `extra` aggregates fused in after them;
+    * the stats row is returned for those. The projection (__y, __x0 ..
+    * __x{d-1}), d+1 doubles per row, is checkpointed: every GD pass
+    * re-reads it instead of re-running the projection.
+    */
+  private def standardized(train: DataFrame, features: Seq[String],
+      label: Column, extra: Seq[Column] = Nil)
+      : (Seq[Double], Seq[Double], Row, DataFrame) = {
+    val statAggs = features.flatMap { f =>
+      Seq(avg(col(f).cast("double")).as(s"m_$f"),
+        stddev_pop(col(f).cast("double")).as(s"s_$f"))
+    } ++ extra
+    val st = train.agg(statAggs.head, statAggs.tail: _*).head()
+    val means = features.indices.map(i => Option(st.get(2 * i))
+      .map(_.asInstanceOf[Double]).getOrElse(0.0))
+    val stds = features.indices.map { i =>
+      val s = Option(st.get(2 * i + 1)).map(_.asInstanceOf[Double]).getOrElse(0.0)
+      if (s > 0.0) s else 1.0
+    }
+    val xs = features.zipWithIndex.map { case (f, i) =>
+      ((col(f).cast("double") - lit(means(i))) / lit(stds(i))).as(s"__x$i")
+    }
+    val data = train.select(label.cast("double").as("__y") +: xs: _*)
+      .localCheckpoint()
+    (means, stds, st, data)
+  }
+
   /** Fit on `train` (must carry `features` numeric columns); `label`
     * must evaluate to 0.0/1.0. Full-batch GD on the standardized
     * features: w ← w − lr · (1/n) Σ x·(σ(w·x+b) − y).
@@ -38,39 +68,20 @@ object Trainer {
       iters: Int = 20, lr: Double = 0.5): LogisticModel = {
     require(iters >= 1, s"fitLogistic: iters must be >= 1, got $iters")
     val d = features.size
-    val statAggs = features.flatMap { f =>
-      Seq(avg(col(f).cast("double")).as(s"m_$f"),
-        stddev_pop(col(f).cast("double")).as(s"s_$f"))
+    val (means, stds, _, data) = standardized(train, features, label)
+    val w = Array.fill(d)(0.0)
+    var b = 0.0
+    for (_ <- 1 to iters) {
+      val margin = (0 until d).map(i => col(s"__x$i") * lit(w(i)))
+        .foldLeft(lit(b))(_ + _)
+      val err = lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")
+      val gAggs = (0 until d).map(i => avg(err * col(s"__x$i")).as(s"g$i")) :+
+        avg(err).as("gb")
+      val g = data.agg(gAggs.head, gAggs.tail: _*).head()
+      for (i <- 0 until d) w(i) -= lr * g.getDouble(i)
+      b -= lr * g.getDouble(d)
     }
-    val st = train.agg(statAggs.head, statAggs.tail: _*).head()
-    val means = features.indices.map(i => Option(st.get(2 * i))
-      .map(_.asInstanceOf[Double]).getOrElse(0.0))
-    val stds = features.indices.map { i =>
-      val s = Option(st.get(2 * i + 1)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-      if (s > 0.0) s else 1.0 // constant column contributes only to intercept
-    }
-    val xs = features.zipWithIndex.map { case (f, i) =>
-      ((col(f).cast("double") - lit(means(i))) / lit(stds(i))).as(s"__x$i")
-    }
-    // cache the standardized projection: every GD pass re-reads it (at
-    // cluster scale: MEMORY_AND_DISK; the projection is d+1 doubles/row)
-    val data = train.select(label.cast("double").as("__y") +: xs: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val w = Array.fill(d)(0.0)
-      var b = 0.0
-      for (_ <- 1 to iters) {
-        val margin = (0 until d).map(i => col(s"__x$i") * lit(w(i)))
-          .foldLeft(lit(b))(_ + _)
-        val err = lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")
-        val gAggs = (0 until d).map(i => avg(err * col(s"__x$i")).as(s"g$i")) :+
-          avg(err).as("gb")
-        val g = data.agg(gAggs.head, gAggs.tail: _*).head()
-        for (i <- 0 until d) w(i) -= lr * g.getDouble(i)
-        b -= lr * g.getDouble(d)
-      }
-      LogisticModel(features, means, stds, w.toSeq, b, iters, lr)
-    } finally data.unpersist()
+    LogisticModel(features, means, stds, w.toSeq, b, iters, lr)
   }
 
   /** Leave-one-fold-out CV twin of [[fitLogistic]]: fits `folds` models
@@ -124,37 +135,35 @@ object Trainer {
       val s = Option(st.get(2 * (j * d + i) + 1)).map(_.asInstanceOf[Double]).getOrElse(0.0)
       if (s > 0.0) s else 1.0
     }
-    // one cached projection carries every mask's standardized view: the
-    // raw doubles + the mask booleans (masks × d pre-standardized columns
-    // would also work but widens the cache; standardize in the aggregate)
+    // one checkpointed projection carries every mask's standardized view:
+    // the raw doubles + the mask booleans (masks × d pre-standardized
+    // columns would also work but widen it; standardize in the aggregate)
     val data = train.select(
       label.cast("double").as("__y") +:
         (masks.zipWithIndex.map { case (mk, j) => mk.as(s"__m$j") } ++
           features.zipWithIndex.map { case (c, i) =>
             col(c).cast("double").as(s"__r$i") }): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val w = Array.fill(k, d)(0.0)
-      val b = Array.fill(k)(0.0)
-      for (_ <- 1 to iters) {
-        val gAggs = (0 until k).flatMap { j =>
-          def x(i: Int) = (col(s"__r$i") - lit(means(j)(i))) / lit(stds(j)(i))
-          val margin = (0 until d).map(i => x(i) * lit(w(j)(i)))
-            .foldLeft(lit(b(j)))(_ + _)
-          val err = lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")
-          (0 until d).map(i =>
-            avg(when(col(s"__m$j"), err * x(i))).as(s"g_${j}_$i")) :+
-            avg(when(col(s"__m$j"), err)).as(s"gb_$j")
-        }
-        val g = data.agg(gAggs.head, gAggs.tail: _*).head()
-        for (j <- 0 until k) {
-          for (i <- 0 until d) w(j)(i) -= lr * g.getDouble(j * (d + 1) + i)
-          b(j) -= lr * g.getDouble(j * (d + 1) + d)
-        }
+      .localCheckpoint()
+    val w = Array.fill(k, d)(0.0)
+    val b = Array.fill(k)(0.0)
+    for (_ <- 1 to iters) {
+      val gAggs = (0 until k).flatMap { j =>
+        def x(i: Int) = (col(s"__r$i") - lit(means(j)(i))) / lit(stds(j)(i))
+        val margin = (0 until d).map(i => x(i) * lit(w(j)(i)))
+          .foldLeft(lit(b(j)))(_ + _)
+        val err = lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")
+        (0 until d).map(i =>
+          avg(when(col(s"__m$j"), err * x(i))).as(s"g_${j}_$i")) :+
+          avg(when(col(s"__m$j"), err)).as(s"gb_$j")
       }
-      (0 until k).map(j => LogisticModel(features,
-        means(j).toSeq, stds(j).toSeq, w(j).toSeq, b(j), iters, lr))
-    } finally data.unpersist()
+      val g = data.agg(gAggs.head, gAggs.tail: _*).head()
+      for (j <- 0 until k) {
+        for (i <- 0 until d) w(j)(i) -= lr * g.getDouble(j * (d + 1) + i)
+        b(j) -= lr * g.getDouble(j * (d + 1) + d)
+      }
+    }
+    (0 until k).map(j => LogisticModel(features,
+      means(j).toSeq, stds(j).toSeq, w(j).toSeq, b(j), iters, lr))
   }
 
   /** Closed-form hyperparameter-grid twin of [[fitLogistic]]: trains one
@@ -175,48 +184,31 @@ object Trainer {
     require(rates.nonEmpty && checkpoints.nonEmpty && checkpoints.forall(_ >= 1),
       s"fitLogisticGrid: need rates and checkpoints >= 1; got $rates, $checkpoints")
     val d = features.size
-    val statAggs = features.flatMap { f =>
-      Seq(avg(col(f).cast("double")).as(s"m_$f"),
-        stddev_pop(col(f).cast("double")).as(s"s_$f"))
-    }
-    val st = train.agg(statAggs.head, statAggs.tail: _*).head()
-    val means = features.indices.map(i => Option(st.get(2 * i))
-      .map(_.asInstanceOf[Double]).getOrElse(0.0))
-    val stds = features.indices.map { i =>
-      val s = Option(st.get(2 * i + 1)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-      if (s > 0.0) s else 1.0
-    }
-    val xs = features.zipWithIndex.map { case (f, i) =>
-      ((col(f).cast("double") - lit(means(i))) / lit(stds(i))).as(s"__x$i")
-    }
-    val data = train.select(label.cast("double").as("__y") +: xs: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val w = Array.fill(rates.size, d)(0.0)
-      val b = Array.fill(rates.size)(0.0)
-      var out = Map.empty[(Double, Int), LogisticModel]
-      for (it <- 1 to checkpoints.max) {
-        val gAggs = rates.indices.flatMap { r =>
-          val margin = (0 until d).map(i => col(s"__x$i") * lit(w(r)(i)))
-            .foldLeft(lit(b(r)))(_ + _)
-          val err = lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")
-          (0 until d).map(i => avg(err * col(s"__x$i")).as(s"g_${r}_$i")) :+
-            avg(err).as(s"gb_$r")
-        }
-        val g = data.agg(gAggs.head, gAggs.tail: _*).head()
+    val (means, stds, _, data) = standardized(train, features, label)
+    val w = Array.fill(rates.size, d)(0.0)
+    val b = Array.fill(rates.size)(0.0)
+    var out = Map.empty[(Double, Int), LogisticModel]
+    for (it <- 1 to checkpoints.max) {
+      val gAggs = rates.indices.flatMap { r =>
+        val margin = (0 until d).map(i => col(s"__x$i") * lit(w(r)(i)))
+          .foldLeft(lit(b(r)))(_ + _)
+        val err = lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")
+        (0 until d).map(i => avg(err * col(s"__x$i")).as(s"g_${r}_$i")) :+
+          avg(err).as(s"gb_$r")
+      }
+      val g = data.agg(gAggs.head, gAggs.tail: _*).head()
+      for (r <- rates.indices) {
+        for (i <- 0 until d) w(r)(i) -= rates(r) * g.getDouble(r * (d + 1) + i)
+        b(r) -= rates(r) * g.getDouble(r * (d + 1) + d)
+      }
+      if (checkpoints.contains(it)) {
         for (r <- rates.indices) {
-          for (i <- 0 until d) w(r)(i) -= rates(r) * g.getDouble(r * (d + 1) + i)
-          b(r) -= rates(r) * g.getDouble(r * (d + 1) + d)
-        }
-        if (checkpoints.contains(it)) {
-          for (r <- rates.indices) {
-            out += (rates(r), it) -> LogisticModel(features, means, stds,
-              w(r).clone().toSeq, b(r), it, rates(r))
-          }
+          out += (rates(r), it) -> LogisticModel(features, means, stds,
+            w(r).clone().toSeq, b(r), it, rates(r))
         }
       }
-      out
-    } finally data.unpersist()
+    }
+    out
   }
 
   /** Class-weighted twin of [[fitLogistic]] — the reference trains with
@@ -241,49 +233,32 @@ object Trainer {
       s"fitLogisticWeighted: posWeights must be positive, got $posWeights")
     require(iters >= 1, s"fitLogisticWeighted: iters must be >= 1, got $iters")
     val d = features.size
-    val statAggs = features.flatMap { f =>
-      Seq(avg(col(f).cast("double")).as(s"m_$f"),
-        stddev_pop(col(f).cast("double")).as(s"s_$f"))
-    }
-    val st = train.agg(statAggs.head, statAggs.tail: _*).head()
-    val means = features.indices.map(i => Option(st.get(2 * i))
-      .map(_.asInstanceOf[Double]).getOrElse(0.0))
-    val stds = features.indices.map { i =>
-      val s = Option(st.get(2 * i + 1)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-      if (s > 0.0) s else 1.0
-    }
-    val xs = features.zipWithIndex.map { case (f, i) =>
-      ((col(f).cast("double") - lit(means(i))) / lit(stds(i))).as(s"__x$i")
-    }
-    val data = train.select(label.cast("double").as("__y") +: xs: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      def cw(k: Int): Column =
-        when(col("__y") === 1.0, lit(posWeights(k))).otherwise(lit(1.0))
-      // per-setting weighted row count — constant across iterations
-      val wsAggs = posWeights.indices.map(k => sum(cw(k)).as(s"ws$k"))
-      val wsRow = data.agg(wsAggs.head, wsAggs.tail: _*).head()
-      val wsum = posWeights.indices.map(wsRow.getDouble)
-      val w = Array.fill(posWeights.size, d)(0.0)
-      val b = Array.fill(posWeights.size)(0.0)
-      for (_ <- 1 to iters) {
-        val gAggs = posWeights.indices.flatMap { k =>
-          val margin = (0 until d).map(i => col(s"__x$i") * lit(w(k)(i)))
-            .foldLeft(lit(b(k)))(_ + _)
-          val err = (lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")) * cw(k)
-          (0 until d).map(i =>
-            (sum(err * col(s"__x$i")) / lit(wsum(k))).as(s"g_${k}_$i")) :+
-            (sum(err) / lit(wsum(k))).as(s"gb_$k")
-        }
-        val g = data.agg(gAggs.head, gAggs.tail: _*).head()
-        for (k <- posWeights.indices) {
-          for (i <- 0 until d) w(k)(i) -= lr * g.getDouble(k * (d + 1) + i)
-          b(k) -= lr * g.getDouble(k * (d + 1) + d)
-        }
+    val (means, stds, _, data) = standardized(train, features, label)
+    def cw(k: Int): Column =
+      when(col("__y") === 1.0, lit(posWeights(k))).otherwise(lit(1.0))
+    // per-setting weighted row count — constant across iterations
+    val wsAggs = posWeights.indices.map(k => sum(cw(k)).as(s"ws$k"))
+    val wsRow = data.agg(wsAggs.head, wsAggs.tail: _*).head()
+    val wsum = posWeights.indices.map(wsRow.getDouble)
+    val w = Array.fill(posWeights.size, d)(0.0)
+    val b = Array.fill(posWeights.size)(0.0)
+    for (_ <- 1 to iters) {
+      val gAggs = posWeights.indices.flatMap { k =>
+        val margin = (0 until d).map(i => col(s"__x$i") * lit(w(k)(i)))
+          .foldLeft(lit(b(k)))(_ + _)
+        val err = (lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")) * cw(k)
+        (0 until d).map(i =>
+          (sum(err * col(s"__x$i")) / lit(wsum(k))).as(s"g_${k}_$i")) :+
+          (sum(err) / lit(wsum(k))).as(s"gb_$k")
       }
-      posWeights.indices.map(k => LogisticModel(features, means, stds,
-        w(k).clone().toSeq, b(k), iters, lr))
-    } finally data.unpersist()
+      val g = data.agg(gAggs.head, gAggs.tail: _*).head()
+      for (k <- posWeights.indices) {
+        for (i <- 0 until d) w(k)(i) -= lr * g.getDouble(k * (d + 1) + i)
+        b(k) -= lr * g.getDouble(k * (d + 1) + d)
+      }
+    }
+    posWeights.indices.map(k => LogisticModel(features, means, stds,
+      w(k).clone().toSeq, b(k), iters, lr))
   }
 
   /** Full-batch subgradient linear SVM (hinge loss + L2) — the engine
@@ -301,39 +276,22 @@ object Trainer {
       iters: Int = 6, lr: Double = 0.5, lambda: Double = 0.01): LogisticModel = {
     require(iters >= 1, s"fitLinearSvm: iters must be >= 1, got $iters")
     val d = features.size
-    val statAggs = features.flatMap { f =>
-      Seq(avg(col(f).cast("double")).as(s"m_$f"),
-        stddev_pop(col(f).cast("double")).as(s"s_$f"))
+    val (means, stds, _, data) = standardized(train, features, label)
+    val w = Array.fill(d)(0.0)
+    var b = 0.0
+    for (_ <- 1 to iters) {
+      val margin = (0 until d).map(i => col(s"__x$i") * lit(w(i)))
+        .foldLeft(lit(b))(_ + _)
+      val yy = col("__y") * 2.0 - 1.0
+      val viol = yy * margin < 1.0
+      val gAggs = (0 until d).map(i =>
+        avg(when(viol, yy * col(s"__x$i")).otherwise(lit(0.0))).as(s"g$i")) :+
+        avg(when(viol, yy).otherwise(lit(0.0))).as("gb")
+      val g = data.agg(gAggs.head, gAggs.tail: _*).head()
+      for (i <- 0 until d) w(i) -= lr * (lambda * w(i) - g.getDouble(i))
+      b += lr * g.getDouble(d)
     }
-    val st = train.agg(statAggs.head, statAggs.tail: _*).head()
-    val means = features.indices.map(i => Option(st.get(2 * i))
-      .map(_.asInstanceOf[Double]).getOrElse(0.0))
-    val stds = features.indices.map { i =>
-      val s = Option(st.get(2 * i + 1)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-      if (s > 0.0) s else 1.0
-    }
-    val xs = features.zipWithIndex.map { case (f, i) =>
-      ((col(f).cast("double") - lit(means(i))) / lit(stds(i))).as(s"__x$i")
-    }
-    val data = train.select(label.cast("double").as("__y") +: xs: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val w = Array.fill(d)(0.0)
-      var b = 0.0
-      for (_ <- 1 to iters) {
-        val margin = (0 until d).map(i => col(s"__x$i") * lit(w(i)))
-          .foldLeft(lit(b))(_ + _)
-        val yy = col("__y") * 2.0 - 1.0
-        val viol = yy * margin < 1.0
-        val gAggs = (0 until d).map(i =>
-          avg(when(viol, yy * col(s"__x$i")).otherwise(lit(0.0))).as(s"g$i")) :+
-          avg(when(viol, yy).otherwise(lit(0.0))).as("gb")
-        val g = data.agg(gAggs.head, gAggs.tail: _*).head()
-        for (i <- 0 until d) w(i) -= lr * (lambda * w(i) - g.getDouble(i))
-        b += lr * g.getDouble(d)
-      }
-      LogisticModel(features, means, stds, w.toSeq, b, iters, lr)
-    } finally data.unpersist()
+    LogisticModel(features, means, stds, w.toSeq, b, iters, lr)
   }
 
   /** One member of a linear family trained in [[fitLinearFamily]]'s
@@ -354,8 +312,8 @@ object Trainer {
 
   /** Fit a whole linear-model family — any mix of plain logistic,
     * class-weighted logistic and linear-SVM members — in the passes of
-    * ONE fit: a single cached standardized projection (the members share
-    * features, so the projection is shared), one fused stats pass that
+    * ONE fit: a single checkpointed standardized projection (the members
+    * share features, so the projection is shared), one fused stats pass that
     * also carries every weighted member's normalizer Σc_i, and ONE
     * aggregate per GD step computing every member's (d+1)-gradient as
     * parallel columns (the [[fitLogisticGrid]]/[[fitLogisticWeighted]]
@@ -378,70 +336,53 @@ object Trainer {
     // projection (same rows, same order, exact-integral weights)
     val wks = members.zipWithIndex.collect {
       case (LinearMember.Weighted(_), k) => k }
-    val statAggs = features.flatMap { f =>
-      Seq(avg(col(f).cast("double")).as(s"m_$f"),
-        stddev_pop(col(f).cast("double")).as(s"s_$f"))
-    } ++ members.zipWithIndex.collect {
-      case (LinearMember.Weighted(pw), k) =>
+    val (means, stds, st, data) = standardized(train, features, label,
+      members.zipWithIndex.collect { case (LinearMember.Weighted(pw), k) =>
         sum(when(label.cast("double") === 1.0, lit(pw)).otherwise(lit(1.0)))
           .as(s"ws$k")
-    }
-    val st = train.agg(statAggs.head, statAggs.tail: _*).head()
-    val means = features.indices.map(i => Option(st.get(2 * i))
-      .map(_.asInstanceOf[Double]).getOrElse(0.0))
-    val stds = features.indices.map { i =>
-      val s = Option(st.get(2 * i + 1)).map(_.asInstanceOf[Double]).getOrElse(0.0)
-      if (s > 0.0) s else 1.0
-    }
+      })
     val wsum: Map[Int, Double] =
       wks.zipWithIndex.map { case (k, j) => k -> st.getDouble(2 * d + j) }.toMap
-    val xs = features.zipWithIndex.map { case (f, i) =>
-      ((col(f).cast("double") - lit(means(i))) / lit(stds(i))).as(s"__x$i")
-    }
-    val data = train.select(label.cast("double").as("__y") +: xs: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val w = Array.fill(members.size, d)(0.0)
-      val b = Array.fill(members.size)(0.0)
-      for (_ <- 1 to iters) {
-        val gAggs = members.zipWithIndex.flatMap { case (mem, k) =>
-          val margin = (0 until d).map(i => col(s"__x$i") * lit(w(k)(i)))
-            .foldLeft(lit(b(k)))(_ + _)
-          mem match {
-            case LinearMember.Logistic =>
-              val err = lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")
-              (0 until d).map(i =>
-                avg(err * col(s"__x$i")).as(s"g_${k}_$i")) :+
-                avg(err).as(s"gb_$k")
-            case LinearMember.Weighted(pw) =>
-              val cw = when(col("__y") === 1.0, lit(pw)).otherwise(lit(1.0))
-              val err = (lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")) * cw
-              (0 until d).map(i =>
-                (sum(err * col(s"__x$i")) / lit(wsum(k))).as(s"g_${k}_$i")) :+
-                (sum(err) / lit(wsum(k))).as(s"gb_$k")
-            case LinearMember.Svm(_) =>
-              val yy = col("__y") * 2.0 - 1.0
-              val viol = yy * margin < 1.0
-              (0 until d).map(i =>
-                avg(when(viol, yy * col(s"__x$i")).otherwise(lit(0.0)))
-                  .as(s"g_${k}_$i")) :+
-                avg(when(viol, yy).otherwise(lit(0.0))).as(s"gb_$k")
-          }
-        }
-        val g = data.agg(gAggs.head, gAggs.tail: _*).head()
-        members.zipWithIndex.foreach {
-          case (LinearMember.Svm(lambda), k) =>
-            for (i <- 0 until d)
-              w(k)(i) -= lr * (lambda * w(k)(i) - g.getDouble(k * (d + 1) + i))
-            b(k) += lr * g.getDouble(k * (d + 1) + d)
-          case (_, k) =>
-            for (i <- 0 until d) w(k)(i) -= lr * g.getDouble(k * (d + 1) + i)
-            b(k) -= lr * g.getDouble(k * (d + 1) + d)
+    val w = Array.fill(members.size, d)(0.0)
+    val b = Array.fill(members.size)(0.0)
+    for (_ <- 1 to iters) {
+      val gAggs = members.zipWithIndex.flatMap { case (mem, k) =>
+        val margin = (0 until d).map(i => col(s"__x$i") * lit(w(k)(i)))
+          .foldLeft(lit(b(k)))(_ + _)
+        mem match {
+          case LinearMember.Logistic =>
+            val err = lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")
+            (0 until d).map(i =>
+              avg(err * col(s"__x$i")).as(s"g_${k}_$i")) :+
+              avg(err).as(s"gb_$k")
+          case LinearMember.Weighted(pw) =>
+            val cw = when(col("__y") === 1.0, lit(pw)).otherwise(lit(1.0))
+            val err = (lit(1.0) / (lit(1.0) + exp(-margin)) - col("__y")) * cw
+            (0 until d).map(i =>
+              (sum(err * col(s"__x$i")) / lit(wsum(k))).as(s"g_${k}_$i")) :+
+              (sum(err) / lit(wsum(k))).as(s"gb_$k")
+          case LinearMember.Svm(_) =>
+            val yy = col("__y") * 2.0 - 1.0
+            val viol = yy * margin < 1.0
+            (0 until d).map(i =>
+              avg(when(viol, yy * col(s"__x$i")).otherwise(lit(0.0)))
+                .as(s"g_${k}_$i")) :+
+              avg(when(viol, yy).otherwise(lit(0.0))).as(s"gb_$k")
         }
       }
-      members.indices.map(k => LogisticModel(features, means, stds,
-        w(k).clone().toSeq, b(k), iters, lr))
-    } finally data.unpersist()
+      val g = data.agg(gAggs.head, gAggs.tail: _*).head()
+      members.zipWithIndex.foreach {
+        case (LinearMember.Svm(lambda), k) =>
+          for (i <- 0 until d)
+            w(k)(i) -= lr * (lambda * w(k)(i) - g.getDouble(k * (d + 1) + i))
+          b(k) += lr * g.getDouble(k * (d + 1) + d)
+        case (_, k) =>
+          for (i <- 0 until d) w(k)(i) -= lr * g.getDouble(k * (d + 1) + i)
+          b(k) -= lr * g.getDouble(k * (d + 1) + d)
+      }
+    }
+    members.indices.map(k => LogisticModel(features, means, stds,
+      w(k).clone().toSeq, b(k), iters, lr))
   }
 
   /** Linear margin w·standardize(x) + b over the RAW feature columns —

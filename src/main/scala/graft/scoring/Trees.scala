@@ -38,7 +38,7 @@ object Trees {
   }
 
   /** Fit on numeric `features` and a 0/1 `label`. The caller should
-    * cache/checkpoint `df` (it is scanned once per feature for the root
+    * checkpoint `df` (it is scanned once per feature for the root
     * and once per feature for the fused child pass). Preconditions: both
     * root sides must admit a split (≥ 2 distinct values of some feature
     * on each side) — guaranteed for any non-degenerate fact table;

@@ -25,7 +25,8 @@ import graft.scale.Banding
   * fingerprint and the band key together: [[Banding.wide64]] runs the
   * 64-bit kernel with 16-bit keys (65k buckets/band, 256× the default's
   * spread) at the same `bands` = 4 pigeonhole. The static side is
-  * re-read per micro-batch; persist the index DataFrame.
+  * re-read per micro-batch; checkpoint the index DataFrame
+  * (`localCheckpoint`).
   */
 object NearDupGate {
   val Bands: Int = Banding.Bands

@@ -48,20 +48,22 @@ object SemanticGate {
 
   /** Freeze the quantizer (bounded collect — k rows) and build the
     * per-cluster member index over yesterday's corpus: one row per
-    * cluster carrying its (id, embedding) structs.
+    * cluster carrying its (id, embedding) structs. The centroids are
+    * checkpointed, so the Lloyd chain runs once for the collect and the
+    * member index; the member index itself stays lazy.
     *
     * Each cluster's member list is ONE row (the Σ|cluster| fold's input),
     * so `k` must scale with the corpus to keep rows task-sized.
     * `maxClusterSize` makes that contract LOUD: when set, the fit runs
     * one extra aggregation over the index and refuses a member list
     * above the bound instead of shipping a row a task cannot hold
-    * (opt-in — the extra pass re-runs the assignment unless the caller
-    * persists, so the default stays lazy).
+    * (opt-in — the extra pass re-runs the assignment and grouping, so
+    * the default stays lazy).
     */
   def fit(index: DataFrame, k: Int, iters: Int,
       maxClusterSize: Option[Int] = None): (Quantizer, DataFrame) = {
     val cent = Similarity.lloydCentroidsRounded(index, k, iters)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val q = Quantizer(cent.collect().map(r =>
       r.getInt(0) -> r.getSeq[Double](1).toSeq).toSeq)
     val members = Similarity.assignTo(index, cent)

@@ -51,4 +51,11 @@ object ColumnBridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
+
+  /** How many plans the session's CacheManager holds (`Dataset.persist`
+    * and `cache` register there until released).
+    */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 }
