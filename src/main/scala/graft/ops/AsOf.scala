@@ -25,23 +25,10 @@ object AsOf {
     * Output: probe_id, key, tm, and the matched payload columns
     * (null when the key has no event at-or-before the probe).
     */
-  def lastEventAsOf(events: DataFrame, probes: DataFrame, payload: Seq[String]): DataFrame = {
-    val ev = events.select(
-      col("key"), col("tm"), lit(0).as("tag"), lit(null).cast("long").as("probe_id"),
-      struct(payload.map(col): _*).as("payload"))
-    val payloadType = ev.schema("payload").dataType
-    val pr = probes.select(
-      col("key"), col("tm"), lit(1).as("tag"), col("probe_id"),
-      lit(null).cast(payloadType).as("payload"))
-    val w = Window.partitionBy(col("key"))
-      .orderBy(col("tm"), col("tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ev.unionByName(pr)
-      .withColumn("matched", last(col("payload"), ignoreNulls = true).over(w))
-      .where(col("tag") === 1)
+  def lastEventAsOf(events: DataFrame, probes: DataFrame, payload: Seq[String]): DataFrame =
+    carry(events, probes, payload.map(col), "matched")
       .select(col("probe_id") +: col("key") +: col("tm") +:
         payload.map(c => col(s"matched.$c").as(c)): _*)
-  }
 
   /** Tolerance-bounded as-of join (pandas `merge_asof(tolerance=...)`):
     * like [[lastEventAsOf]], but a match older than `tolerance` time
@@ -52,10 +39,24 @@ object AsOf {
     * time are nulled when the only candidate is stale.
     */
   def lastEventAsOfTol(events: DataFrame, probes: DataFrame,
-                       payload: Seq[String], tolerance: Long): DataFrame = {
+                       payload: Seq[String], tolerance: Long): DataFrame =
+    carry(events, probes, col("tm").as("__evtm") +: payload.map(col), "m")
+      .withColumn("fresh", col("m").isNotNull &&
+        col("m.__evtm") >= col("tm") - tolerance)
+      .select(col("probe_id") +: col("key") +: col("tm") +:
+        when(col("fresh"), col("m.__evtm")).as("matched_tm") +:
+        payload.map(c => when(col("fresh"), col(s"m.$c")).as(c)): _*)
+
+  /** The union-tag body of both joins: events (tag 0) carry `fields` as
+    * one struct, probes (tag 1) a null of its type, and one
+    * `last(_, ignoreNulls)` window on the key carries the latest event
+    * struct forward as column `carried`. Returns the probe rows.
+    */
+  private def carry(events: DataFrame, probes: DataFrame, fields: Seq[Column],
+                    carried: String): DataFrame = {
     val ev = events.select(
       col("key"), col("tm"), lit(0).as("tag"), lit(null).cast("long").as("probe_id"),
-      struct((col("tm").as("__evtm") +: payload.map(col)): _*).as("payload"))
+      struct(fields: _*).as("payload"))
     val payloadType = ev.schema("payload").dataType
     val pr = probes.select(
       col("key"), col("tm"), lit(1).as("tag"), col("probe_id"),
@@ -64,12 +65,7 @@ object AsOf {
       .orderBy(col("tm"), col("tag"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ev.unionByName(pr)
-      .withColumn("m", last(col("payload"), ignoreNulls = true).over(w))
+      .withColumn(carried, last(col("payload"), ignoreNulls = true).over(w))
       .where(col("tag") === 1)
-      .withColumn("fresh", col("m").isNotNull &&
-        col("m.__evtm") >= col("tm") - tolerance)
-      .select(col("probe_id") +: col("key") +: col("tm") +:
-        when(col("fresh"), col("m.__evtm")).as("matched_tm") +:
-        payload.map(c => when(col("fresh"), col(s"m.$c")).as(c)): _*)
   }
 }

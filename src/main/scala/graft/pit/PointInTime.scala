@@ -31,7 +31,7 @@ object PointInTime {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("ts_micros"))
     val featCols = windows.flatMap { case (name, secs) =>
-      val frame = w.rangeBetween(-(secs * 1000000L - 1), 0)
+      val frame = Trailing.lastSeconds(w, secs)
       Seq(
         count(col("amount")).over(frame).as(s"txn_count_$name"),
         coalesce(sum(col("amount")).over(frame), lit(0.0)).as(s"txn_amount_sum_$name"))

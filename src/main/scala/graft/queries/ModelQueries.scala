@@ -2059,7 +2059,7 @@ FROM events"""
       val m = Trainer.fitLogistic(scored.where(col("event_id") % 10 === 0),
         Seq("d4"), col("y"), iters = 8, lr = 0.5)
       val storeDir = scratchDir("graft_q250_models")
-      ModelStore.table(s, ServedModel.withManifest(
+      ModelStore.table(s, ModelStore.withManifest(
           ModelStore.nbPlattRows("nbp", 1L, nb, m)))
         .write.mode("overwrite").parquet(storeDir)
       val rows2 = ModelStore.rowsOf(s.read.parquet(storeDir), "nbp", 1L)
@@ -2071,7 +2071,7 @@ FROM events"""
       val parity = f.where(col("event_id") % 10 === 5)
         .agg(count(lit(1)).as("n_scored"),
           sum(when(built.score === fittedP, 1L).otherwise(0L)).as("n_agree"))
-      val (nb2, cal2) = ModelStore.nbPlattOf(ServedModel.body(rows2))
+      val (nb2, cal2) = ModelStore.nbPlattOf(ModelStore.body(rows2))
       import s.implicits._
       ModelStore.nbPlattRows("nbp", 1L, nb2, cal2).toDF()
         .select(col("model_id"), col("kind"), col("part"), col("idx"),
@@ -2116,7 +2116,7 @@ FROM events"""
           lit(rows2.count(_.kind == "manifest").toLong))
       import s.implicits._
       ModelStore.forestRows("rf", 1L,
-          ModelStore.forestOf(ServedModel.body(rows2))).toDF()
+          ModelStore.forestOf(ModelStore.body(rows2))).toDF()
         .select(col("model_id"), col("kind"), col("part"), col("idx"),
           col("k"), col("k2"), r6(col("v1")).as("v1"), col("v2"),
           col("c1"), col("c2"), col("c3"), col("c4"))
@@ -2227,6 +2227,15 @@ k_$f AS (SELECT CAST(count(*) AS DOUBLE) AS k FROM l_$f)"""
   private def nbTerm(f: String): String =
     s"""ln((coalesce(l_$f.c1, 0) + 1)/(pr.n1 + k_$f.k)) - ln((coalesce(l_$f.c0, 0) + 1)/(pr.n0 + k_$f.k))"""
 
+  /** The Platt calibrator of q235/q241/q250: a logistic fit on the one
+    * standardized feature d4 of the `cal` rows, 8 steps at rate 0.5.
+    * Publishes `ps` (m0, s0) and the weight states i0..i8 (w0, b).
+    */
+  private val plattFitSql =
+    s"""ps AS MATERIALIZED (SELECT ${sqlStats(Seq(0))} FROM (SELECT d4 AS x0 FROM cal)),
+dc AS MATERIALIZED (SELECT ${sqlStd(Seq(0))}, y FROM (SELECT d4 AS x0, y FROM cal) t, ps),
+${sqlGd("i", "dc", Seq(0), 8, "0.5")}"""
+
 
   /** Gradient-boosting oracle builders (q180/q191): the round-by-round
     * replay as static CTEs, parameterized by the fact CTE name `src` so
@@ -2305,13 +2314,6 @@ k_$f AS (SELECT CAST(count(*) AS DOUBLE) AS k FROM l_$f)"""
         gbFeatures.map(f => candCte(t, f)) :+ bestCte(t)).mkString(",\n")
     }.mkString(",\n")
   }
-
-  /** Mid-rank (Wilcoxon) AUC over CTE `src` -> r$sfx/u$sfx. */
-  private def gbMidrankAuc(sfx: String, src: String): String =
-    s"""r$sfx AS (SELECT y, rank() OVER (ORDER BY s) + (count(*) OVER (PARTITION BY s) - 1)/2.0 AS midrank FROM $src),
-u$sfx AS (SELECT count(*) AS n, CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-    (sum(CASE WHEN y = 1 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0)
-      / (sum(y)*(count(*) - sum(y))) END AS auc FROM r$sfx)"""
 
   /** Boosted depth-2 tree oracle builders (q201): per-round root pass +
     * fused per-side child pass with leaf-membership residual terms —
@@ -2476,9 +2478,6 @@ u$sfx AS (SELECT count(*) AS n, CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
   private def smoteCtes(src: String, salt: String,
       repBound: String = "scm.m", gJoin: String = "", k: Int = 5): String = {
     val idx = 0 to 2
-    val statSel = idx.map(i =>
-      s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-      .mkString(", ")
     val zSel = idx.map(i => s"round((x$i - m$i)/s$i + 5e-11, 4) AS z$i")
       .mkString(", ")
     val d2 = idx.map(i => s"((q.z$i - c.z$i)*(q.z$i - c.z$i))").mkString(" + ")
@@ -2493,7 +2492,7 @@ smi AS MATERIALIZED (
     ('0x' || substr(md5('$salt:s:' || event_id), 1, 8))::UBIGINT % ss.s AS shard,
     CAST(value AS DOUBLE) AS x0, CAST(hb AS DOUBLE) AS x1, CAST(dowi AS DOUBLE) AS x2
   FROM $src, sshard ss WHERE y = 1),
-sst AS (SELECT $statSel FROM smi),
+sst AS (SELECT ${sqlStats(idx)} FROM smi),
 sz AS MATERIALIZED (SELECT pid, shard, x0, x1, x2, $zSel FROM smi, sst),
 ssc AS (SELECT q.shard, q.pid AS qid, c.pid AS nid, $d2 AS d2
   FROM sz c JOIN sz q ON c.shard = q.shard AND c.pid <> q.pid),
@@ -2524,17 +2523,13 @@ smsyn AS MATERIALIZED (SELECT p.qid, p.nid, p.rep, p.lam, $synSel
   private def wlrSql(salt: String, pws: Seq[String], withBest: Boolean): String = {
     val iters = 6
     val idx = 0 to 2
-    val statSel = idx.map(i =>
-      s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-      .mkString(",\n    ")
-    val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
     def cwOf(k: Int) =
       s"(CASE WHEN d.y = 1.0 THEN CAST(${pws(k)} AS DOUBLE) ELSE CAST(1.0 AS DOUBLE) END)"
     val wsSel = pws.indices.map(k => s"sum(${cwOf(k)}) AS ws$k").mkString(", ")
     def chain(k: Int): String = {
       val i0 = s"i0_k$k AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
       val its = (1 to iters).map { t =>
-        val m = s"i.b + ${idx.map(i => s"i.w$i * d.x$i").mkString(" + ")}"
+        val m = sqlMargin("i", idx)
         val p = s"1.0/(1.0 + exp(-($m)))"
         val err = s"(($p - d.y) * ${cwOf(k)})"
         val upd = idx.map(i =>
@@ -2546,9 +2541,9 @@ smsyn AS MATERIALIZED (SELECT p.qid, p.nid, p.rep, p.lam, $synSel
     }
     def cell(k: Int): String =
       s"""sc$k AS MATERIALIZED (
-  SELECT t.y, (i.b + i.w0*t.x0 + i.w1*t.x1 + i.w2*t.x2) AS sv
+  SELECT t.y, ${sqlMargin("i", idx, "t")} AS sv
   FROM dv t, i${iters}_k$k i),
-${gbMidrankAuc(s"w$k", s"(SELECT CAST(y AS INT) AS y, sv AS s FROM sc$k)")},
+${sqlAuc(s"uw$k", s"(SELECT CAST(y AS INT) AS y, sv AS s FROM sc$k)", "s")},
 mt$k AS (SELECT count(*) AS n_val,
     CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
     CAST(sum(CASE WHEN sv > 0 THEN 1 ELSE 0 END) AS BIGINT) AS alerts,
@@ -2590,9 +2585,9 @@ wfp AS MATERIALIZED (
 wtr AS (SELECT * FROM wfp WHERE vb5 <> 0),
 wct AS (SELECT CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS np,
     CAST(sum(CASE WHEN y = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS nn FROM wtr),
-s AS (SELECT $statSel FROM wtr),
-d AS MATERIALIZED (SELECT $stdSel, y FROM wtr, s),
-dv AS MATERIALIZED (SELECT $stdSel, y FROM (SELECT * FROM wfp WHERE vb5 = 0) t, s),
+s AS (SELECT ${sqlStats(idx)} FROM wtr),
+d AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM wtr, s),
+dv AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM (SELECT * FROM wfp WHERE vb5 = 0) t, s),
 ws AS (SELECT $wsSel FROM d),
 ${pws.indices.map(chain).mkString(",\n")},
 ${pws.indices.map(cell).mkString(",\n")},
@@ -2979,8 +2974,7 @@ pts0 AS (
   SELECT user_id, CAST(cnt AS DOUBLE) AS x1,
     CAST(cents AS DOUBLE)/cnt/100.0 AS x2
   FROM per),
-st AS (SELECT avg(x1) AS m1, coalesce(nullif(stddev_pop(x1), 0.0), 1.0) AS s1,
-  avg(x2) AS m2, coalesce(nullif(stddev_pop(x2), 0.0), 1.0) AS s2 FROM pts0),
+st AS (SELECT ${sqlStats(Seq(1, 2))} FROM pts0),
 pts AS MATERIALIZED (
   SELECT user_id, round((x1 - m1)/s1 + 5e-11, 4) AS z1,
     round((x2 - m2)/s2 + 5e-11, 4) AS z2
@@ -3015,24 +3009,6 @@ FROM a3 GROUP BY 1"""
 k${f}_$c AS (SELECT CAST(count(*) AS DOUBLE) AS k FROM l${f}_$c)"""
       def nbTermF(f: Int, c: String) =
         s"ln((coalesce(l${f}_$c.c1, 0) + 1)/(pr$f.n1 + k${f}_$c.k)) - ln((coalesce(l${f}_$c.c0, 0) + 1)/(pr$f.n0 + k${f}_$c.k))"
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      def marginOf(it: String) =
-        idx.map(i => s"$it.w$i * d.x$i").mkString(" + ") + s" + $it.b"
-      def lrChain(f: String, src: String, n: Int) = {
-        val i0 = s"i0_$f AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-        val its = (1 to n).map { k =>
-          val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-          val upd = idx.map(i =>
-            s"i.w$i - 0.5*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-            s",\n    i.b - 0.5*avg($p - d.y) AS b"
-          val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b"
-          s"i${k}_$f AS MATERIALIZED (SELECT $upd\n  FROM $src d, i${k - 1}_$f i GROUP BY $grp)"
-        }.mkString(",\n")
-        s"$i0,\n$its"
-      }
       def fvB(f: Int) =
         s"""(CASE WHEN b$f.bf = 'value' THEN CAST(fb.value AS DOUBLE)
       WHEN b$f.bf = 'hb' THEN CAST(fb.hb AS DOUBLE)
@@ -3048,9 +3024,9 @@ best$f AS MATERIALIZED (
     CASE WHEN pos_right*2 > n_right THEN 1 ELSE 0 END AS rm
   FROM (${sF.map(c => s"SELECT * FROM cb${f}_$c").mkString(" UNION ALL ")})
   ORDER BY round(gini + 5e-11, 4), feature, threshold LIMIT 1),
-s$f AS (SELECT $statSel FROM tr$f),
-dtr$f AS MATERIALIZED (SELECT $stdSel, y::DOUBLE AS y FROM tr$f, s$f),
-${lrChain(f.toString, s"dtr$f", lrIt)},
+s$f AS (SELECT ${sqlStats(idx)} FROM tr$f),
+dtr$f AS MATERIALIZED (SELECT ${sqlStd(idx)}, y::DOUBLE AS y FROM tr$f, s$f),
+${sqlGd(s"g${f}_", s"dtr$f", idx, lrIt, "0.5")},
 oof$f AS (
   SELECT fb.y,
     round(ln(pr$f.n1/pr$f.n0)
@@ -3061,13 +3037,8 @@ oof$f AS (
   FROM fb
   CROSS JOIN pr$f ${nbF.map(c => s"CROSS JOIN k${f}_$c").mkString(" ")}
   ${nbF.map(c => s"LEFT JOIN l${f}_$c ON fb.$c = l${f}_$c.v").mkString("\n  ")}
-  CROSS JOIN best$f b$f CROSS JOIN s$f CROSS JOIN i${lrIt}_$f i
+  CROSS JOIN best$f b$f CROSS JOIN s$f CROSS JOIN g${f}_$lrIt i
   WHERE fb.fold = $f)"""
-      def aucCte(name: String, score: String, src: String) =
-        s"""rk_$name AS (SELECT y, rank() OVER (ORDER BY $score) + (count(*) OVER (PARTITION BY $score) - 1)/2.0 AS midrank FROM $src),
-au_$name AS (SELECT CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-    (sum(CASE WHEN y = 1 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-  END AS auc FROM rk_$name)"""
       s"""WITH fb AS MATERIALIZED (
   SELECT e.*, CAST(value AS DOUBLE) AS x0, CAST(hb AS DOUBLE) AS x1, CAST(dowi AS DOUBLE) AS x2,
     (row_number() OVER (PARTITION BY y
@@ -3077,19 +3048,15 @@ au_$name AS (SELECT CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
 ${(0 until 3).map(foldBlock).mkString(",\n")},
 oof AS MATERIALIZED (
   SELECT * FROM oof0 UNION ALL SELECT * FROM oof1 UNION ALL SELECT * FROM oof2),
-sm AS (SELECT avg(m_nb) AS m0, coalesce(nullif(stddev_pop(m_nb), 0.0), 1.0) AS s0,
-  avg(m_stump) AS m1, coalesce(nullif(stddev_pop(m_stump), 0.0), 1.0) AS s1,
-  avg(m_lr) AS m2, coalesce(nullif(stddev_pop(m_lr), 0.0), 1.0) AS s2 FROM oof),
-dm AS MATERIALIZED (
-  SELECT (m_nb - m0)/s0 AS x0, (m_stump - m1)/s1 AS x1, (m_lr - m2)/s2 AS x2,
-    y::DOUBLE AS y
-  FROM oof, sm),
-${lrChain("m", "dm", metaIt)},
-scm AS (SELECT d.y, ${marginOf(s"i${metaIt}_m")} AS sv FROM dm d, i${metaIt}_m),
-${aucCte("nb", "m_nb", "oof")},
-${aucCte("st", "m_stump", "oof")},
-${aucCte("lr", "m_lr", "oof")},
-${aucCte("meta", "sv", "scm")},
+oofx AS (SELECT m_nb AS x0, m_stump AS x1, m_lr AS x2, y::DOUBLE AS y FROM oof),
+sm AS (SELECT ${sqlStats(idx)} FROM oofx),
+dm AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM oofx, sm),
+${sqlGd("gm_", "dm", idx, metaIt, "0.5")},
+scm AS (SELECT d.y, ${sqlMargin(s"gm_$metaIt", idx)} AS sv FROM dm d, gm_$metaIt),
+${sqlAuc("au_nb", "oof", "m_nb")},
+${sqlAuc("au_st", "oof", "m_stump")},
+${sqlAuc("au_lr", "oof", "m_lr")},
+${sqlAuc("au_meta", "scm", "sv")},
 va AS (SELECT count(*) AS n,
   round(avg(CASE WHEN (CASE WHEN (CASE WHEN m_nb > 0 THEN 1 ELSE 0 END
       + CASE WHEN m_stump > 0.5 THEN 1 ELSE 0 END
@@ -3109,7 +3076,7 @@ SELECT va.n,
   round(i.w1 + 5e-11, 4) AS w_m_stump,
   round(i.w2 + 5e-11, 4) AS w_m_lr
 FROM va CROSS JOIN au_nb CROSS JOIN au_st CROSS JOIN au_lr CROSS JOIN au_meta
-CROSS JOIN i${metaIt}_m i"""
+CROSS JOIN gm_$metaIt i"""
     },
     "q183_lr_grid" -> {
       // the q165/q172 unrolled-GD technique, once per learning rate; the
@@ -3121,41 +3088,18 @@ CROSS JOIN i${metaIt}_m i"""
       val maxIt = checks.max
       val feats = Seq("value", "hb", "dowi")
       val idx = feats.indices
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      def marginOf(it: String) =
-        idx.map(i => s"$it.w$i * d.x$i").mkString(" + ") + s" + $it.b"
-      def chain(r: Int): String = {
-        val rate = rates(r)
-        val i0 = s"i0_r$r AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-        val iters = (1 to maxIt).map { k =>
-          val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-          val upd = idx.map(i =>
-            s"i.w$i - $rate*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-            s",\n    i.b - $rate*avg($p - d.y) AS b"
-          val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b"
-          s"i${k}_r$r AS MATERIALIZED (SELECT $upd\n  FROM d, i${k - 1}_r$r i GROUP BY $grp)"
-        }.mkString(",\n")
-        s"$i0,\n$iters"
-      }
+      def chain(r: Int): String = sqlGd(s"g${r}_", "d", idx, maxIt, rates(r))
       def cell(r: Int, it: Int): String = {
-        val w = s"i${it}_r$r"
-        s"""sc_${r}_$it AS (SELECT d.y, ${marginOf(w)} AS sv FROM dv d, $w),
-rk_${r}_$it AS (SELECT y, rank() OVER (ORDER BY sv) + (count(*) OVER (PARTITION BY sv) - 1)/2.0 AS midrank FROM sc_${r}_$it),
-au_${r}_$it AS (SELECT count(*) AS n,
-    CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-      (sum(CASE WHEN y = 1.0 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-    END AS auc
-  FROM rk_${r}_$it)"""
+        val w = s"g${r}_$it"
+        s"""sc_${r}_$it AS (SELECT d.y, ${sqlMargin(w, idx)} AS sv FROM dv d, $w),
+${sqlAuc(s"au_${r}_$it", s"sc_${r}_$it", "sv")}"""
       }
       def cellRow(r: Int, it: Int): String = {
-        val w = s"i${it}_r$r"
+        val w = s"g${r}_$it"
         val ws = feats.zipWithIndex.map { case (c, i) =>
-          s"round($w.w$i + 5e-11, 4) AS w_$c" }.mkString(", ")
-        s"""SELECT ${rates(r)}::DOUBLE AS lr, $it AS iters, a.n AS n_val, round(a.auc + 5e-11, 4) AS auc,
-  round($w.b + 5e-11, 4) AS intercept, $ws
+          s"${sqlR4(s"$w.w$i")} AS w_$c" }.mkString(", ")
+        s"""SELECT ${rates(r)}::DOUBLE AS lr, $it AS iters, a.n AS n_val, ${sqlR4("a.auc")} AS auc,
+  ${sqlR4(s"$w.b")} AS intercept, $ws
 FROM au_${r}_$it a, $w"""
       }
       val cellDefs = (for { r <- rates.indices; it <- checks } yield cell(r, it))
@@ -3169,9 +3113,9 @@ fp AS MATERIALIZED (
     ('0x' || substr(md5('gridval:' || event_id), 1, 8))::UBIGINT % 5 AS vb5
   FROM fb),
 tr AS (SELECT * FROM fp WHERE vb5 <> 0),
-s AS (SELECT $statSel FROM tr),
-d AS MATERIALIZED (SELECT $stdSel, y FROM tr, s),
-dv AS MATERIALIZED (SELECT $stdSel, y FROM (SELECT * FROM fp WHERE vb5 = 0) t, s),
+s AS (SELECT ${sqlStats(idx)} FROM tr),
+d AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM tr, s),
+dv AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM (SELECT * FROM fp WHERE vb5 = 0) t, s),
 ${rates.indices.map(chain).mkString(",\n")},
 $cellDefs,
 cells AS MATERIALIZED (
@@ -3190,23 +3134,6 @@ GROUP BY c.lr, c.iters, c.n_val, c.auc, c.intercept, c.w_value, c.w_hb, c.w_dowi
       val sF = Seq("value", "hb", "dowi")
       val idx = 0 until 3
       val lrIt = 10
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      def marginOf(it: String) =
-        idx.map(i => s"$it.w$i * d.x$i").mkString(" + ") + s" + $it.b"
-      val lrChain = {
-        val i0 = s"i0_q AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-        val its = (1 to lrIt).map { k =>
-          val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-          val upd = idx.map(i =>
-            s"i.w$i - 0.5*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-            s",\n    i.b - 0.5*avg($p - d.y) AS b"
-          val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b"
-          s"i${k}_q AS MATERIALIZED (SELECT $upd\n  FROM dtr d, i${k - 1}_q i GROUP BY $grp)"
-        }.mkString(",\n")
-        s"$i0,\n$its"
-      }
       def nbLikeQ(c: String) =
         s"""l_$c AS (SELECT $c AS v, CAST(sum(y) AS DOUBLE) AS c1,
   CAST(count(*) - sum(y) AS DOUBLE) AS c0 FROM tr GROUP BY 1),
@@ -3218,10 +3145,7 @@ k_$c AS (SELECT CAST(count(*) AS DOUBLE) AS k FROM l_$c)"""
       WHEN best.bf = 'hb' THEN CAST(va.hb AS DOUBLE)
       ELSE CAST(va.dowi AS DOUBLE) END)"""
       def mblock(name: String, src: String, thr: String) =
-        s"""rk_$name AS (SELECT y, rank() OVER (ORDER BY s) + (count(*) OVER (PARTITION BY s) - 1)/2.0 AS midrank FROM $src),
-au_$name AS (SELECT CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-    (sum(CASE WHEN y = 1 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-  END AS auc FROM rk_$name),
+        s"""${sqlAuc(s"au_$name", src, "s")},
 cm_$name AS (SELECT count(*) AS n_val,
     sum(CASE WHEN s > $thr AND y = 1 THEN 1 ELSE 0 END) AS tp,
     sum(CASE WHEN s > $thr AND y = 0 THEN 1 ELSE 0 END) AS fp,
@@ -3261,13 +3185,13 @@ best AS MATERIALIZED (
 stsc AS MATERIALIZED (
   SELECT va.y, round((CASE WHEN $bfv <= best.bt THEN best.lrate ELSE best.rrate END) + 5e-11, 4) AS s
   FROM va CROSS JOIN best),
-sq AS (SELECT $statSel FROM tr),
-dtr AS MATERIALIZED (SELECT ${idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")}, y::DOUBLE AS y FROM tr, sq),
-$lrChain,
+sq AS (SELECT ${sqlStats(idx)} FROM tr),
+dtr AS MATERIALIZED (SELECT ${sqlStd(idx)}, y::DOUBLE AS y FROM tr, sq),
+${sqlGd("gq_", "dtr", idx, lrIt, "0.5")},
 lrsc AS MATERIALIZED (
   SELECT va.y, round(i.w0*((va.x0 - sq.m0)/sq.s0) + i.w1*((va.x1 - sq.m1)/sq.s1)
     + i.w2*((va.x2 - sq.m2)/sq.s2) + i.b + 5e-11, 4) AS s
-  FROM va, sq, i${lrIt}_q i),
+  FROM va, sq, gq_$lrIt i),
 f0 AS (SELECT round(sum(y)::DOUBLE / count(*) + 5e-11, 4) AS v FROM tr),
 ${gbRoundCtes(3, "tr")},
 gbsc AS MATERIALIZED (
@@ -3299,7 +3223,7 @@ sc AS MATERIALIZED (
   FROM fb CROSS JOIN f0$scJoins),
 a AS (SELECT count(*) AS n,
     round(avg((y - s)*(y - s)) + 5e-11, 4) AS train_mse FROM sc),
-${gbMidrankAuc("", "sc")}
+${sqlAuc("u", "sc", "s")}
 SELECT a.n, f0.v AS f0,
   $outCols,
   a.train_mse, round(u.auc + 5e-11, 4) AS train_auc
@@ -3317,7 +3241,7 @@ FROM a CROSS JOIN u CROSS JOIN f0$scJoins"""
         s"""sc$t AS MATERIALIZED (
   SELECT vld.y, ${gbScoreExpr(t, "vld")} AS s
   FROM vld CROSS JOIN f0$joins),
-${gbMidrankAuc(t.toString, s"sc$t")}"""
+${sqlAuc(s"u$t", s"sc$t", "s")}"""
       }.mkString(",\n")
       val rows = (1 to T).map(t =>
         s"""SELECT $t AS round, b$t.f AS feature, round(b$t.t + 5e-11, 4) AS threshold,
@@ -3565,7 +3489,7 @@ sc AS MATERIALIZED (
   SELECT vld.y, ${(0 until trees).map(t => s"(${vote(t)}) AS v$t").mkString(",\n    ")}
   FROM vld$joins),
 scv AS (SELECT y, CAST($vsum AS DOUBLE) AS s FROM sc),
-${gbMidrankAuc("", "scv")},
+${sqlAuc("u", "scv", "s")},
 a AS (SELECT count(*) AS n_val,
   round(avg(CASE WHEN (CASE WHEN $vsum >= 3 THEN 1 ELSE 0 END) = y THEN 1.0 ELSE 0.0 END) + 5e-11, 4) AS ens_acc,
   ${(0 until trees).map(t => s"round(avg(CASE WHEN v$t = y THEN 1.0 ELSE 0.0 END) + 5e-11, 4) AS acc$t").mkString(",\n  ")}
@@ -3589,7 +3513,6 @@ ${rows.mkString("\nUNION ALL\n")}"""
       def phiExpr(fname: String) = (1 to T).map(j =>
         s"(CASE WHEN b$j.f = '$fname' THEN ${gTerm(j)} - e.eg$j ELSE 0.0 END)")
         .mkString("0.0 + ", " + ", "")
-      def r4(x: String) = s"round($x + 5e-11, 4)"
       s"""WITH fb AS MATERIALIZED ($featSql),
 f0 AS (SELECT round(sum(y)::DOUBLE / count(*) + 5e-11, 4) AS v FROM fb),
 ${gbRoundCtes(T, "fb")},
@@ -3607,12 +3530,12 @@ sc AS MATERIALIZED (
     ${phiExpr("hb")} AS ph,
     ${phiExpr("dowi")} AS pd
   FROM fb CROSS JOIN f0 CROSS JOIN e$scJoins)
-SELECT event_id, ${r4("s")} AS score, ${r4("b")} AS base_value,
-  ${r4("pv")} AS phi_value, ${r4("ph")} AS phi_hb, ${r4("pd")} AS phi_dowi,
-  CASE WHEN abs(${r4("pv")}) >= abs(${r4("ph")}) AND abs(${r4("pv")}) >= abs(${r4("pd")}) THEN 'value'
-       WHEN abs(${r4("ph")}) >= abs(${r4("pd")}) THEN 'hb'
+SELECT event_id, ${sqlR4("s")} AS score, ${sqlR4("b")} AS base_value,
+  ${sqlR4("pv")} AS phi_value, ${sqlR4("ph")} AS phi_hb, ${sqlR4("pd")} AS phi_dowi,
+  CASE WHEN abs(${sqlR4("pv")}) >= abs(${sqlR4("ph")}) AND abs(${sqlR4("pv")}) >= abs(${sqlR4("pd")}) THEN 'value'
+       WHEN abs(${sqlR4("ph")}) >= abs(${sqlR4("pd")}) THEN 'hb'
        ELSE 'dowi' END AS top_factor,
-  ${r4("s - b - pv - ph - pd")} AS additivity_gap
+  ${sqlR4("s - b - pv - ph - pd")} AS additivity_gap
 FROM sc"""
     },
     "q201_boosted_trees" -> {
@@ -3632,7 +3555,7 @@ sc AS MATERIALIZED (
   FROM fb CROSS JOIN f0$joins),
 a AS (SELECT count(*) AS n,
     round(avg((y - s)*(y - s)) + 5e-11, 4) AS train_mse FROM sc),
-${gbMidrankAuc("", "sc")}
+${sqlAuc("u", "sc", "s")}
 SELECT a.n, f0.v AS f0,
   $outCols,
   a.train_mse, round(u.auc + 5e-11, 4) AS train_auc
@@ -3692,7 +3615,6 @@ FROM a CROSS JOIN u CROSS JOIN f0$joins"""
         }.mkString("0.0 + ", " + ", "")
       val scoreExpr = (1 to T).map(t => rounds(t)._5).mkString("f0.v + ", " + ", "")
       val baseExpr = (1 to T).map(t => rounds(t)._4).mkString("f0.v + ", " + ", "")
-      def r4(x: String) = s"round($x + 5e-11, 4)"
       s"""WITH fb AS MATERIALIZED ($featSql),
 f0 AS (SELECT round(sum(y)::DOUBLE / count(*) + 5e-11, 4) AS v FROM fb),
 ${(1 to T).map(t => gbtRound(t, "fb")).mkString(",\n")},
@@ -3708,16 +3630,15 @@ sc AS MATERIALIZED (
     ${phiExpr("hb")} AS ph,
     ${phiExpr("dowi")} AS pd
   FROM fb CROSS JOIN f0 CROSS JOIN pop$joins)
-SELECT event_id, ${r4("s")} AS score, ${r4("b")} AS base_value,
-  ${r4("pv")} AS phi_value, ${r4("ph")} AS phi_hb, ${r4("pd")} AS phi_dowi,
-  CASE WHEN abs(${r4("pv")}) >= abs(${r4("ph")}) AND abs(${r4("pv")}) >= abs(${r4("pd")}) THEN 'value'
-       WHEN abs(${r4("ph")}) >= abs(${r4("pd")}) THEN 'hb'
+SELECT event_id, ${sqlR4("s")} AS score, ${sqlR4("b")} AS base_value,
+  ${sqlR4("pv")} AS phi_value, ${sqlR4("ph")} AS phi_hb, ${sqlR4("pd")} AS phi_dowi,
+  CASE WHEN abs(${sqlR4("pv")}) >= abs(${sqlR4("ph")}) AND abs(${sqlR4("pv")}) >= abs(${sqlR4("pd")}) THEN 'value'
+       WHEN abs(${sqlR4("ph")}) >= abs(${sqlR4("pd")}) THEN 'hb'
        ELSE 'dowi' END AS top_factor,
-  ${r4("s - b - pv - ph - pd")} AS additivity_gap
+  ${sqlR4("s - b - pv - ph - pd")} AS additivity_gap
 FROM sc"""
     },
     "q212_performance_history" -> {
-      def r4(x: String) = s"round($x + 5e-11, 4)"
       s"""WITH b AS (SELECT max(epoch_us(ts)) AS max_tm FROM events),
 wk AS (
   SELECT CAST(floor((max_tm - epoch_us(ts)) / 604800000000) AS BIGINT) AS week,
@@ -3738,15 +3659,15 @@ cf AS (SELECT week, count(*) AS n, CAST(sum(y) AS BIGINT) AS n_pos,
   FROM wk GROUP BY week),
 per AS (SELECT cf.*, pp.auc FROM cf JOIN pp USING (week)),
 pri AS (SELECT week - 1 AS week, auc AS prev FROM per),
-mn AS (SELECT min(${r4("auc")}) AS mn FROM per)
-SELECT p.week, p.n, p.n_pos, ${r4("p.auc")} AS auc,
-  ${r4("(p.n - p.fp - p.fn)::DOUBLE / p.n")} AS accuracy,
-  ${r4("CASE WHEN p.tp + p.fp > 0 THEN p.tp::DOUBLE / (p.tp + p.fp) END")} AS prec,
-  ${r4("CASE WHEN p.tp + p.fn > 0 THEN p.tp::DOUBLE / (p.tp + p.fn) END")} AS rec,
-  ${r4("CASE WHEN 2*p.tp + p.fp + p.fn > 0 THEN 2.0*p.tp / (2*p.tp + p.fp + p.fn) END")} AS f1,
-  ${r4("p.auc - pri.prev")} AS delta_auc,
+mn AS (SELECT min(${sqlR4("auc")}) AS mn FROM per)
+SELECT p.week, p.n, p.n_pos, ${sqlR4("p.auc")} AS auc,
+  ${sqlR4("(p.n - p.fp - p.fn)::DOUBLE / p.n")} AS accuracy,
+  ${sqlR4("CASE WHEN p.tp + p.fp > 0 THEN p.tp::DOUBLE / (p.tp + p.fp) END")} AS prec,
+  ${sqlR4("CASE WHEN p.tp + p.fn > 0 THEN p.tp::DOUBLE / (p.tp + p.fn) END")} AS rec,
+  ${sqlR4("CASE WHEN 2*p.tp + p.fp + p.fn > 0 THEN 2.0*p.tp / (2*p.tp + p.fp + p.fn) END")} AS f1,
+  ${sqlR4("p.auc - pri.prev")} AS delta_auc,
   CASE WHEN pri.prev IS NOT NULL THEN pri.prev - p.auc > 0.05 ELSE false END AS degraded,
-  coalesce(${r4("p.auc")} = mn.mn, false) AS is_worst
+  coalesce(${sqlR4("p.auc")} = mn.mn, false) AS is_worst
 FROM per p LEFT JOIN pri USING (week) CROSS JOIN mn"""
     },
     "q211_halving_search" -> {
@@ -3757,37 +3678,17 @@ FROM per p LEFT JOIN pri USING (week) CROSS JOIN mn"""
       // cells even though the oracle computes them.
       val feats = Seq("value", "hb", "dowi")
       val idx = feats.indices
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      def marginOf(it: String) =
-        idx.map(i => s"$it.w$i * d.x$i").mkString(" + ") + s" + $it.b"
-      def chain(t: Int): String = {
-        val i0 = s"i0_r$t AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-        val iters = (1 to 12).map { k =>
-          val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-          val upd = idx.map(i =>
-            s"i.w$i - tt.lr*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-            s",\n    i.b - tt.lr*avg($p - d.y) AS b"
-          val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b, tt.lr"
-          s"i${k}_r$t AS MATERIALIZED (SELECT $upd\n  FROM d, i${k - 1}_r$t i, t$t tt GROUP BY $grp)"
-        }.mkString(",\n")
-        s"t$t AS (SELECT lr FROM trl WHERE t = $t),\n$i0,\n$iters"
-      }
+      def chain(t: Int): String =
+        s"t$t AS (SELECT lr FROM trl WHERE t = $t),\n" +
+          sqlGd(s"g${t}_", "d", idx, 12, s"(SELECT lr FROM trl WHERE t = $t)")
       def aucBlock(t: Int, it: Int): String =
-        s"""sc_${t}_$it AS (SELECT d.y, ${marginOf(s"i${it}_r$t")} AS sv FROM dv d, i${it}_r$t),
-rk_${t}_$it AS (SELECT y, rank() OVER (ORDER BY sv) + (count(*) OVER (PARTITION BY sv) - 1)/2.0 AS midrank FROM sc_${t}_$it),
-au_${t}_$it AS (SELECT CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-      (sum(CASE WHEN y = 1.0 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-    END AS auc
-  FROM rk_${t}_$it)"""
+        s"""sc_${t}_$it AS (SELECT d.y, ${sqlMargin(s"g${t}_$it", idx)} AS sv FROM dv d, g${t}_$it),
+${sqlAuc(s"au_${t}_$it", s"sc_${t}_$it", "sv")}"""
       val cellRows = (0 until 6).map(t =>
         s"""SELECT $t AS trial, tt.lr, au_${t}_3.auc AS a1, au_${t}_6.auc AS a2, au_${t}_12.auc AS a3
 FROM au_${t}_3, au_${t}_6, au_${t}_12, t$t tt""").mkString("\nUNION ALL\n")
       def better(a: String, b: String, t2: String, t1: String) =
         s"(coalesce($a,-1.0) > coalesce($b,-1.0) OR (coalesce($a,-1.0) = coalesce($b,-1.0) AND $t2 < $t1))"
-      def r4(x: String) = s"round($x + 5e-11, 4)"
       s"""WITH fb AS ($featSql),
 fp AS MATERIALIZED (
   SELECT event_id, CAST(value AS DOUBLE) AS x0, CAST(hb AS DOUBLE) AS x1,
@@ -3798,9 +3699,9 @@ trl AS (
   SELECT t, round(0.05 + 1.95*(((('0x' || substr(md5('lr:' || t), 1, 8))::UBIGINT % 10000))/10000.0) + 5e-11, 4) AS lr
   FROM (SELECT unnest(range(6)) AS t)),
 tr AS (SELECT * FROM fp WHERE vb5 <> 0),
-s AS (SELECT $statSel FROM tr),
-d AS MATERIALIZED (SELECT $stdSel, y FROM tr, s),
-dv AS MATERIALIZED (SELECT $stdSel, y FROM (SELECT * FROM fp WHERE vb5 = 0) t, s),
+s AS (SELECT ${sqlStats(idx)} FROM tr),
+d AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM tr, s),
+dv AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM (SELECT * FROM fp WHERE vb5 = 0) t, s),
 ${(0 until 6).map(chain).mkString(",\n")},
 ${(for { t <- 0 until 6; it <- Seq(3, 6, 12) } yield aucBlock(t, it)).mkString(",\n")},
 cells AS MATERIALIZED (
@@ -3817,35 +3718,28 @@ rk2 AS MATERIALIZED (
   GROUP BY r.trial, r.lr, r.a1, r.a2, r.a3, r.nb1)
 SELECT CAST(trial AS BIGINT) AS trial, lr,
   CAST(CASE WHEN nb1 < 3 AND nb2 = 0 THEN 3 WHEN nb1 < 3 THEN 2 ELSE 1 END AS BIGINT) AS rung_reached,
-  ${r4("a1")} AS auc_r1,
-  CASE WHEN nb1 < 3 THEN ${r4("a2")} END AS auc_r2,
-  CASE WHEN nb1 < 3 AND nb2 = 0 THEN ${r4("a3")} END AS auc_r3,
+  ${sqlR4("a1")} AS auc_r1,
+  CASE WHEN nb1 < 3 THEN ${sqlR4("a2")} END AS auc_r2,
+  CASE WHEN nb1 < 3 AND nb2 = 0 THEN ${sqlR4("a3")} END AS auc_r3,
   (nb1 < 3 AND nb2 = 0) AS selected
 FROM rk2""" },
     "q210_rfe" -> {
-      // three masked unrolled-GD chains: the argmin scalar d1/d2 pins a
-      // dropped feature's weight to literal 0.0 inside each update CASE
-      // (arithmetically identical to refitting without the feature);
+      // the plain fit, then two masked unrolled-GD chains: the argmin
+      // scalar d1/d2 pins a dropped feature's weight to literal 0.0 inside
+      // each update CASE (arithmetically identical to refitting without
+      // the feature);
       // argmins compare 4dp |weights| with lowest-index tie-break,
       // mirroring the Scala minBy.
       val idx = 0 until 4
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      def marginOf(it: String) =
-        idx.map(i => s"$it.w$i * d.x$i").mkString(" + ") + s" + $it.b"
       def chain(sfx: String, iters: Int, masks: Seq[String]): String = {
         val mjoin = masks.map(m => s", $m").mkString
         def isDropped(j: Int) = masks.map(m => s"$m.d = $j").mkString(" OR ")
         val i0 = s"i0_$sfx AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
         val its = (1 to iters).map { k =>
-          val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-          val upd = idx.map { i =>
-            val base = s"i.w$i - 0.5*avg(($p - d.y) * d.x$i)"
-            if (masks.isEmpty) s"$base AS w$i"
-            else s"CASE WHEN ${isDropped(i)} THEN 0.0 ELSE $base END AS w$i"
-          }.mkString(",\n    ") + s",\n    i.b - 0.5*avg($p - d.y) AS b"
+          val p = s"1.0/(1.0 + exp(-(${sqlMargin("i", idx)})))"
+          val upd = idx.map(i =>
+            s"CASE WHEN ${isDropped(i)} THEN 0.0 ELSE i.w$i - 0.5*avg(($p - d.y) * d.x$i) END AS w$i")
+            .mkString(",\n    ") + s",\n    i.b - 0.5*avg($p - d.y) AS b"
           val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b" +
             masks.map(m => s", $m.d").mkString
           s"i${k}_$sfx AS MATERIALIZED (SELECT $upd\n  FROM d, i${k - 1}_$sfx i$mjoin GROUP BY $grp)"
@@ -3879,10 +3773,10 @@ fp AS MATERIALIZED (
   SELECT CAST(value AS DOUBLE) AS x0, CAST(hb AS DOUBLE) AS x1,
     CAST(dowi AS DOUBLE) AS x2, CAST(vb AS DOUBLE) AS x3, y::DOUBLE AS y
   FROM fb),
-s AS (SELECT $statSel FROM fp),
-d AS MATERIALIZED (SELECT $stdSel, y FROM fp, s),
-${chain("a", 6, Nil)},
-${argminCte("d1", "i6_a", Nil)},
+s AS (SELECT ${sqlStats(idx)} FROM fp),
+d AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM fp, s),
+${sqlGd("ia", "d", idx, 6, "0.5")},
+${argminCte("d1", "ia6", Nil)},
 ${chain("b", 6, Seq("d1"))},
 ${argminCte("d2", "i6_b", Seq("d1"))},
 ${chain("c", 6, Seq("d1", "d2"))}
@@ -3898,40 +3792,20 @@ $rows"""
       val feats = Seq("value", "hb", "dowi")
       val idx = feats.indices
       val trialIts = (0 until 6).map(t => 3 + graft.scale.Splits.bucketLocal("it", t.toString, 10).toInt)
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      def marginOf(it: String) =
-        idx.map(i => s"$it.w$i * d.x$i").mkString(" + ") + s" + $it.b"
-      def chain(t: Int): String = {
-        val i0 = s"i0_r$t AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-        val iters = (1 to trialIts(t)).map { k =>
-          val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-          val upd = idx.map(i =>
-            s"i.w$i - tt.lr*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-            s",\n    i.b - tt.lr*avg($p - d.y) AS b"
-          val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b, tt.lr"
-          s"i${k}_r$t AS MATERIALIZED (SELECT $upd\n  FROM d, i${k - 1}_r$t i, t$t tt GROUP BY $grp)"
-        }.mkString(",\n")
-        s"t$t AS (SELECT lr FROM trl WHERE t = $t),\n$i0,\n$iters"
-      }
+      def chain(t: Int): String =
+        s"t$t AS (SELECT lr FROM trl WHERE t = $t),\n" +
+          sqlGd(s"g${t}_", "d", idx, trialIts(t), s"(SELECT lr FROM trl WHERE t = $t)")
       def cell(t: Int): String = {
-        val w = s"i${trialIts(t)}_r$t"
-        s"""sc_$t AS (SELECT d.y, ${marginOf(w)} AS sv FROM dv d, $w),
-rk_$t AS (SELECT y, rank() OVER (ORDER BY sv) + (count(*) OVER (PARTITION BY sv) - 1)/2.0 AS midrank FROM sc_$t),
-au_$t AS (SELECT count(*) AS n,
-    CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-      (sum(CASE WHEN y = 1.0 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-    END AS auc
-  FROM rk_$t)"""
+        val w = s"g${t}_${trialIts(t)}"
+        s"""sc_$t AS (SELECT d.y, ${sqlMargin(w, idx)} AS sv FROM dv d, $w),
+${sqlAuc(s"au_$t", s"sc_$t", "sv")}"""
       }
       def cellRow(t: Int): String = {
-        val w = s"i${trialIts(t)}_r$t"
+        val w = s"g${t}_${trialIts(t)}"
         val ws = feats.zipWithIndex.map { case (c, i) =>
-          s"round($w.w$i + 5e-11, 4) AS w_$c" }.mkString(", ")
-        s"""SELECT $t AS trial, tt.lr, ${trialIts(t)} AS iters, a.n AS n_val, a.auc AS aucr, round(a.auc + 5e-11, 4) AS auc,
-  round($w.b + 5e-11, 4) AS intercept, $ws
+          s"${sqlR4(s"$w.w$i")} AS w_$c" }.mkString(", ")
+        s"""SELECT $t AS trial, tt.lr, ${trialIts(t)} AS iters, a.n AS n_val, a.auc AS aucr, ${sqlR4("a.auc")} AS auc,
+  ${sqlR4(s"$w.b")} AS intercept, $ws
 FROM au_$t a, $w, t$t tt"""
       }
       def mrk(v: String) =
@@ -3949,9 +3823,9 @@ trl AS (
   SELECT t, round(0.05 + 1.95*(((('0x' || substr(md5('lr:' || t), 1, 8))::UBIGINT % 10000))/10000.0) + 5e-11, 4) AS lr
   FROM (SELECT unnest(range(6)) AS t)),
 tr AS (SELECT * FROM fp WHERE vb5 <> 0),
-s AS (SELECT $statSel FROM tr),
-d AS MATERIALIZED (SELECT $stdSel, y FROM tr, s),
-dv AS MATERIALIZED (SELECT $stdSel, y FROM (SELECT * FROM fp WHERE vb5 = 0) t, s),
+s AS (SELECT ${sqlStats(idx)} FROM tr),
+d AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM tr, s),
+dv AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM (SELECT * FROM fp WHERE vb5 = 0) t, s),
 ${(0 until 6).map(chain).mkString(",\n")},
 ${(0 until 6).map(cell).mkString(",\n")},
 cells AS MATERIALIZED (
@@ -3983,8 +3857,7 @@ FROM rks r CROSS JOIN imp"""
       // over the shared held-out slice; gates combined in the
       // reference's priority order.
       val fs = Seq("hb", "dowi", "vb")
-      def r4(x: String) = s"round($x + 5e-11, 4)"
-      val gates = s"st.n_feedback >= 100 AND (dr.drift_detected OR ${r4("st.acc")} < 0.85)"
+      val gates = s"st.n_feedback >= 100 AND (dr.drift_detected OR ${sqlR4("st.acc")} < 0.85)"
       s"""WITH b AS (SELECT max(epoch_us(ts)) AS max_tm FROM events),
 t AS (
   SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y, value AS s,
@@ -4026,22 +3899,20 @@ scnb AS (
   FROM te
   CROSS JOIN pr ${fs.map(f => s"CROSS JOIN k_$f").mkString(" ")}
   ${fs.map(f => s"LEFT JOIN l_$f ON te.$f = l_$f.v").mkString("\n  ")}),
-o1 AS (SELECT y, value AS s FROM te),
-${gbMidrankAuc("o", "o1")},
-n1 AS (SELECT y, delta AS s FROM scnb),
-${gbMidrankAuc("nw", "n1")}
+${sqlAuc("uo", "te", "value")},
+${sqlAuc("unw", "scnb", "delta")}
 SELECT st.n_feedback,
-  ${r4("dr.auc_recent")} AS auc_recent, ${r4("dr.auc_prior")} AS auc_prior,
-  ${r4("dr.degradation")} AS degradation, dr.drift_detected,
-  ${r4("st.acc")} AS feedback_accuracy,
+  ${sqlR4("dr.auc_recent")} AS auc_recent, ${sqlR4("dr.auc_prior")} AS auc_prior,
+  ${sqlR4("dr.degradation")} AS degradation, dr.drift_detected,
+  ${sqlR4("st.acc")} AS feedback_accuracy,
   ($gates) AS should_retrain,
   CASE WHEN NOT st.n_feedback >= 100 THEN 'insufficient_feedback'
        WHEN dr.drift_detected THEN 'performance_drift'
-       WHEN ${r4("st.acc")} < 0.85 THEN 'low_accuracy'
+       WHEN ${sqlR4("st.acc")} < 0.85 THEN 'low_accuracy'
        ELSE 'no_retraining_needed' END AS reason,
-  ${r4("uo.auc")} AS old_auc, ${r4("unw.auc")} AS new_auc,
-  ${r4("unw.auc - uo.auc")} AS improvement,
-  (($gates) AND ${r4("unw.auc - uo.auc")} > 0) AS promote
+  ${sqlR4("uo.auc")} AS old_auc, ${sqlR4("unw.auc")} AS new_auc,
+  ${sqlR4("unw.auc - uo.auc")} AS improvement,
+  (($gates) AND ${sqlR4("unw.auc - uo.auc")} > 0) AS promote
 FROM st CROSS JOIN dr CROSS JOIN uo CROSS JOIN unw"""
     },
     "q205_lime_local" -> {
@@ -4073,13 +3944,12 @@ FROM st CROSS JOIN dr CROSS JOIN uo CROSS JOIN unw"""
       val sse = (0 until 8).map(p =>
         s"(s$p - ${fittedSql(p)})*(s$p - ${fittedSql(p)})").mkString(" + ")
       val sst = (0 until 8).map(p => s"(s$p - b)*(s$p - b)").mkString(" + ")
-      def r4(x: String) = s"round($x + 5e-11, 4)"
       val scCols = (0 until 8).map(p => s"    ${mScore(p)} AS s$p").mkString(",\n")
       s"""WITH fb AS MATERIALIZED ($featSql),
 f0 AS (SELECT round(sum(y)::DOUBLE / count(*) + 5e-11, 4) AS v FROM fb),
 ${(1 to T).map(t => gbtRound(t, "fb")).mkString(",\n")},
-bg AS (SELECT ${r4("avg(value)")} AS bgv, ${r4("avg(hb)")} AS bgh,
-  ${r4("avg(dowi)")} AS bgd FROM fb),
+bg AS (SELECT ${sqlR4("avg(value)")} AS bgv, ${sqlR4("avg(hb)")} AS bgh,
+  ${sqlR4("avg(dowi)")} AS bgd FROM fb),
 sc AS MATERIALIZED (
   SELECT fb.event_id,
 $scCols
@@ -4094,12 +3964,12 @@ fi AS (
     $sse AS sse,
     $sst AS sst
   FROM su)
-SELECT event_id, ${r4("s7")} AS prediction, ${r4("b")} AS intercept,
-  ${r4("b0")} AS lime_value, ${r4("b1")} AS lime_hb, ${r4("b2")} AS lime_dowi,
-  ${r4("b + b0 + b1 + b2")} AS local_pred,
+SELECT event_id, ${sqlR4("s7")} AS prediction, ${sqlR4("b")} AS intercept,
+  ${sqlR4("b0")} AS lime_value, ${sqlR4("b1")} AS lime_hb, ${sqlR4("b2")} AS lime_dowi,
+  ${sqlR4("b + b0 + b1 + b2")} AS local_pred,
   round(CASE WHEN sst > 0 THEN 1.0 - sse/sst ELSE 1.0 END + 5e-11, 4) AS fidelity_r2,
-  CASE WHEN abs(${r4("b0")}) >= abs(${r4("b1")}) AND abs(${r4("b0")}) >= abs(${r4("b2")}) THEN 'value'
-       WHEN abs(${r4("b1")}) >= abs(${r4("b2")}) THEN 'hb'
+  CASE WHEN abs(${sqlR4("b0")}) >= abs(${sqlR4("b1")}) AND abs(${sqlR4("b0")}) >= abs(${sqlR4("b2")}) THEN 'value'
+       WHEN abs(${sqlR4("b1")}) >= abs(${sqlR4("b2")}) THEN 'hb'
        ELSE 'dowi' END AS top_factor
 FROM fi"""
     },
@@ -4220,9 +4090,6 @@ CROSS JOIN sct ct CROSS JOIN scm cm"""
       // integer allocation → the shared smoteCtes synthesis chain with
       // the per-parent rep bound
       val idx = 0 to 2
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(", ")
       val zSel = idx.map(i => s"round((x$i - m$i)/s$i + 5e-11, 4) AS z$i")
         .mkString(", ")
       val d2 = idx.map(i => s"((q.z$i - c.z$i)*(q.z$i - c.z$i))").mkString(" + ")
@@ -4234,7 +4101,7 @@ adct AS (SELECT CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS np,
 adsh AS (SELECT greatest(1, least(1024, (np * (np + nn)) // 1000000)) AS s FROM adct),
 adraw AS (SELECT event_id, y, CAST(value AS DOUBLE) AS x0,
     CAST(hb AS DOUBLE) AS x1, CAST(dowi AS DOUBLE) AS x2 FROM sf),
-adst AS (SELECT $statSel FROM adraw),
+adst AS (SELECT ${sqlStats(idx)} FROM adraw),
 adz AS MATERIALIZED (SELECT event_id AS pid, y,
     ('0x' || substr(md5('adasyn:d:' || event_id), 1, 8))::UBIGINT % ss.s AS shard,
     $zSel
@@ -4271,14 +4138,10 @@ CROSS JOIN adct ct CROSS JOIN adsum s"""
       // margin terms in fitLinearSvm's fold order (intercept first),
       // L2 shrink 1e-2 and rate 0.5 as literals
       val idx = 0 to 2
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(", ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
       val chain = {
         val i0 = s"sv0 AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
         val its = (1 to 6).map { t =>
-          val m = s"i.b + ${idx.map(i => s"i.w$i * d.x$i").mkString(" + ")}"
+          val m = sqlMargin("i", idx)
           val yy = "(d.y * 2.0 - 1.0)"
           val viol = s"($yy * ($m)) < 1.0"
           val upd = idx.map(i =>
@@ -4296,14 +4159,14 @@ svp AS MATERIALIZED (
     ('0x' || substr(md5('svm:' || event_id), 1, 8))::UBIGINT % 5 AS vb5
   FROM svb),
 svtr AS (SELECT * FROM svp WHERE vb5 <> 0),
-svs AS (SELECT $statSel FROM svtr),
-svd AS MATERIALIZED (SELECT $stdSel, y FROM svtr, svs),
-svv AS MATERIALIZED (SELECT $stdSel, y FROM (SELECT * FROM svp WHERE vb5 = 0) t, svs),
+svs AS (SELECT ${sqlStats(idx)} FROM svtr),
+svd AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM svtr, svs),
+svv AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM (SELECT * FROM svp WHERE vb5 = 0) t, svs),
 $chain,
 svsc AS MATERIALIZED (
-  SELECT t.y, (i.b + i.w0*t.x0 + i.w1*t.x1 + i.w2*t.x2) AS sv
+  SELECT t.y, ${sqlMargin("i", idx, "t")} AS sv
   FROM svv t, sv6 i),
-${gbMidrankAuc("sv", "(SELECT CAST(y AS INT) AS y, sv AS s FROM svsc)")},
+${sqlAuc("usv", "(SELECT CAST(y AS INT) AS y, sv AS s FROM svsc)", "s")},
 svmt AS (SELECT count(*) AS n_val,
     round(avg(greatest(0.0, 1.0 - (y * 2.0 - 1.0) * sv)) + 5e-11, 4) AS hinge_loss,
     round(avg(CASE WHEN (CASE WHEN sv > 0 THEN 1.0 ELSE 0.0 END) = y THEN 1.0 ELSE 0.0 END) + 5e-11, 4) AS accuracy
@@ -4317,9 +4180,6 @@ FROM svmt mt CROSS JOIN usv CROSS JOIN sv6 i"""
     },
     "q225_enn" -> {
       val idx = 0 to 2
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(", ")
       val zSel = idx.map(i => s"round((x$i - m$i)/s$i + 5e-11, 4) AS z$i")
         .mkString(", ")
       val d2 = idx.map(i => s"((q.z$i - c.z$i)*(q.z$i - c.z$i))").mkString(" + ")
@@ -4329,7 +4189,7 @@ ect AS (SELECT CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS np,
 esh AS (SELECT greatest(1, least(8192, (nn * (np + nn)) // 2000000)) AS s FROM ect),
 eraw AS (SELECT event_id, y, CAST(value AS DOUBLE) AS x0,
     CAST(hb AS DOUBLE) AS x1, CAST(dowi AS DOUBLE) AS x2 FROM sf),
-est AS (SELECT $statSel FROM eraw),
+est AS (SELECT ${sqlStats(idx)} FROM eraw),
 ez AS MATERIALIZED (SELECT event_id AS pid, y,
     ('0x' || substr(md5('enn:d:' || event_id), 1, 8))::UBIGINT % ss.s AS shard,
     $zSel
@@ -4494,16 +4354,12 @@ $outRows"""
       // engine's exact (fitted vs rebuilt) score parity.
       val idx = 0 to 2
       val feats = gbFeatures
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(", ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
       // weighted logistic GD chain (pw = 1 is the plain trainer)
       def lrChain(pfx: String, pw: String): String = {
         val cw = s"(CASE WHEN d.y = 1.0 THEN CAST($pw AS DOUBLE) ELSE CAST(1.0 AS DOUBLE) END)"
         val i0 = s"${pfx}0 AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
         val its = (1 to 6).map { t =>
-          val m = s"i.b + ${idx.map(i => s"i.w$i * d.x$i").mkString(" + ")}"
+          val m = sqlMargin("i", idx)
           val err = s"((1.0/(1.0 + exp(-($m))) - d.y) * $cw)"
           val upd = idx.map(i =>
             s"i.w$i - 0.5*(sum($err * d.x$i) / ws.w) AS w$i").mkString(",\n    ") +
@@ -4516,7 +4372,7 @@ $outRows"""
       val svmChain = {
         val i0 = s"qs0 AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
         val its = (1 to 6).map { t =>
-          val m = s"i.b + ${idx.map(i => s"i.w$i * d.x$i").mkString(" + ")}"
+          val m = sqlMargin("i", idx)
           val yy = "(d.y * 2.0 - 1.0)"
           val viol = s"($yy * ($m)) < 1.0"
           val upd = idx.map(i =>
@@ -4527,7 +4383,6 @@ $outRows"""
         }.mkString(",\n")
         s"$i0,\n$its"
       }
-      def rr(e: String) = s"round($e + 5e-11, 4)"
       // one output row in the ModelStore layout; `from` empty = constants
       def orow(mid: String, kind: String, part: String, idxE: String,
           kE: String = "NULL", k2E: String = "NULL", v1: String = "NULL",
@@ -4546,21 +4401,21 @@ $outRows"""
   CAST($t3 AS DOUBLE) AS t3, mc.n AS n_scored, mc.n AS n_agree
 FROM ${if (from.isEmpty) "mcnt mc" else s"$from CROSS JOIN mcnt mc"}"""
       def logisticRows(mid: String, chain: String): Seq[String] =
-        orow(mid, "logistic", "meta", "0", v1 = rr("i.b"), v2 = "0.5",
+        orow(mid, "logistic", "meta", "0", v1 = sqlR4("i.b"), v2 = "0.5",
           c1 = "6", from = s"${chain}6 i") +:
           idx.map(i => orow(mid, "logistic", "feature", i.toString,
-            kE = s"'${feats(i)}'", v1 = rr(s"st.m$i"), v2 = rr(s"st.s$i"),
-            v3 = rr(s"i.w$i"), from = s"${chain}6 i CROSS JOIN qst st"))
+            kE = s"'${feats(i)}'", v1 = sqlR4(s"st.m$i"), v2 = sqlR4(s"st.s$i"),
+            v3 = sqlR4(s"i.w$i"), from = s"${chain}6 i CROSS JOIN qst st"))
       val abRows = (1 to 3).map(t =>
         orow("ab", "adaboost", "round", (t - 1).toString, kE = s"ab$t.f",
-          v1 = rr(s"ab$t.t"), v2 = rr(s"ab$t.err"), v3 = s"ab$t.beta",
+          v1 = sqlR4(s"ab$t.t"), v2 = sqlR4(s"ab$t.err"), v3 = s"ab$t.beta",
           v4 = s"ab$t.a", c1 = s"ab$t.ll", c2 = s"ab$t.rl",
           from = s"ab$t CROSS JOIN abfl") + s"\nWHERE ${abKeep(t)}")
       val bstRows =
         orow("bst", "boost_stumps", "meta", "0", v1 = "f0.v", v2 = "0.5",
           from = "f0") +:
           (1 to 3).map(t => orow("bst", "boost_stumps", "round",
-            (t - 1).toString, kE = s"b.f", v1 = rr("b.t"), v2 = "b.vl",
+            (t - 1).toString, kE = s"b.f", v1 = sqlR4("b.t"), v2 = "b.vl",
             v3 = "b.vr", from = s"best$t b"))
       val btrRows =
         orow("btr", "boost_trees", "meta", "0", v1 = "f0.v", v2 = "0.5",
@@ -4569,23 +4424,23 @@ FROM ${if (from.isEmpty) "mcnt mc" else s"$from CROSS JOIN mcnt mc"}"""
             (t - 1).toString,
             kE = s"broot$t.f || ',' || bl$t.f || ',' || br$t.f",
             v1 = s"bl$t.vl", v2 = s"bl$t.vr", v3 = s"br$t.vl",
-            v4 = s"br$t.vr", t1 = rr(s"broot$t.t"), t2 = rr(s"bl$t.t"),
-            t3 = rr(s"br$t.t"),
+            v4 = s"br$t.vr", t1 = sqlR4(s"broot$t.t"), t2 = sqlR4(s"bl$t.t"),
+            t3 = sqlR4(s"br$t.t"),
             from = s"broot$t CROSS JOIN bl$t CROSS JOIN br$t"))
       def treeMeta(mid: String) = orow(mid, "tree", "meta", "0",
         c1 = "st.n", c2 = "st.pos", c3 = "2", from = "st_mr0 st")
       val dtRows = Seq(treeMeta("dt"),
         orow("dt", "tree", "split", "t.idx", kE = "t.k", k2E = "t.feature",
-          v1 = rr("t.threshold"), v2 = "t.gini", c1 = "t.n_left",
+          v1 = sqlR4("t.threshold"), v2 = "t.gini", c1 = "t.n_left",
           c2 = "t.pos_left", c3 = "t.n_right", c4 = "t.pos_right",
           from = "mtsi t"))
       val bftRows = Seq(treeMeta("bft"),
         orow("bft", "tree", "split", "0", kE = "''", k2E = "t.feature",
-          v1 = rr("t.threshold"), v2 = "t.gini", c1 = "t.n_left",
+          v1 = sqlR4("t.threshold"), v2 = "t.gini", c1 = "t.n_left",
           c2 = "t.pos_left", c3 = "t.n_right", c4 = "t.pos_right",
           from = "b_mr0 t"),
         orow("bft", "tree", "split", "1", kE = "t.k", k2E = "t.feature",
-          v1 = rr("t.threshold"), v2 = "t.gini", c1 = "t.n_left",
+          v1 = sqlR4("t.threshold"), v2 = "t.gini", c1 = "t.n_left",
           c2 = "t.pos_left", c3 = "t.n_right", c4 = "t.pos_right",
           from = "bpick t"))
       def gimp(p: String, n: String) =
@@ -4609,8 +4464,8 @@ FROM $b c, b_mr0 r, st_mr0 st"""
 mcnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM mf),
 qraw AS (SELECT CAST(value AS DOUBLE) AS x0, CAST(hb AS DOUBLE) AS x1,
   CAST(dowi AS DOUBLE) AS x2, y::DOUBLE AS y FROM mf),
-qst AS (SELECT $statSel FROM qraw),
-qd AS MATERIALIZED (SELECT $stdSel, y FROM qraw, qst),
+qst AS (SELECT ${sqlStats(idx)} FROM qraw),
+qd AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM qraw, qst),
 ${lrChain("ql", "1.0")},
 ${lrChain("qw", "5.0")},
 $svmChain,
@@ -4647,7 +4502,7 @@ apa0 AS (SELECT CAST(sum(c) AS BIGINT) AS n, CAST(sum(yp) AS BIGINT) AS n_pos,
       sum(CAST(yp AS DOUBLE) * (CAST(ctp AS DOUBLE) / cn)) / CAST(sum(yp) AS DOUBLE)
     END AS ap
   FROM apc0),
-${gbMidrankAuc("ap0", "(SELECT y, value AS s FROM af)")},
+${sqlAuc("uap0", "af", "value")},
 apgg AS (SELECT dowi AS g, value AS s, count(*) AS c, CAST(sum(y) AS BIGINT) AS yp
   FROM af GROUP BY 1, 2),
 apcg AS (SELECT *, CAST(sum(c) OVER w AS BIGINT) AS cn,
@@ -4679,9 +4534,6 @@ FROM apag a JOIN apug u USING (g)"""
     },
     "q222_tomek_links" -> {
       val idx = 0 to 2
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(", ")
       val zSel = idx.map(i => s"round((x$i - m$i)/s$i + 5e-11, 4) AS z$i")
         .mkString(", ")
       val d2 = idx.map(i => s"((q.z$i - c.z$i)*(q.z$i - c.z$i))").mkString(" + ")
@@ -4691,7 +4543,7 @@ tkct AS (SELECT CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS np,
 tksh AS (SELECT greatest(1, least(4096, ((np + nn) * (np + nn)) // 2000000)) AS s FROM tkct),
 tkraw AS (SELECT event_id, y, CAST(value AS DOUBLE) AS x0,
     CAST(hb AS DOUBLE) AS x1, CAST(dowi AS DOUBLE) AS x2 FROM sf),
-tkst AS (SELECT $statSel FROM tkraw),
+tkst AS (SELECT ${sqlStats(idx)} FROM tkraw),
 tkz AS MATERIALIZED (SELECT event_id AS pid, y,
     ('0x' || substr(md5('tomek:d:' || event_id), 1, 8))::UBIGINT % ss.s AS shard,
     $zSel
@@ -4720,26 +4572,10 @@ FROM tklk l CROSS JOIN tknl nl CROSS JOIN tkct ct"""
       // SMOTE-augmented, each standardized by ITS OWN train moments,
       // margin terms in fitLogistic's fold order), one metric cell each
       val idx = 0 to 2
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(", ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      def chain(p: String, src: String): String = {
-        val i0 = s"i0_$p AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS b)"
-        val its = (1 to 6).map { t =>
-          val mg = s"i.b + ${idx.map(i => s"i.w$i * d.x$i").mkString(" + ")}"
-          val pr = s"1.0/(1.0 + exp(-($mg)))"
-          val upd = idx.map(i =>
-            s"i.w$i - 0.5*avg(($pr - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-            s",\n    i.b - 0.5*avg($pr - d.y) AS b"
-          s"i${t}_$p AS MATERIALIZED (SELECT $upd\n  FROM $src d, i${t - 1}_$p i GROUP BY i.w0, i.w1, i.w2, i.b)"
-        }.mkString(",\n")
-        s"$i0,\n$its"
-      }
       def cell(p: String, stCte: String): String =
-        s"""dv_$p AS MATERIALIZED (SELECT $stdSel, y FROM vraw t, $stCte),
-sc_$p AS MATERIALIZED (SELECT t.y, (i.b + i.w0*t.x0 + i.w1*t.x1 + i.w2*t.x2) AS sv FROM dv_$p t, i6_$p i),
-${gbMidrankAuc(p, s"(SELECT CAST(y AS INT) AS y, sv AS s FROM sc_$p)")},
+        s"""dv_$p AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM vraw t, $stCte),
+sc_$p AS MATERIALIZED (SELECT d.y, ${sqlMargin(s"g${p}_6", idx)} AS sv FROM dv_$p d, g${p}_6),
+${sqlAuc(s"u$p", s"(SELECT CAST(y AS INT) AS y, sv AS s FROM sc_$p)", "s")},
 mt_$p AS (SELECT count(*) AS n_val,
     CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
     CAST(sum(CASE WHEN sv > 0 THEN 1 ELSE 0 END) AS BIGINT) AS alerts,
@@ -4757,7 +4593,7 @@ mt_$p AS (SELECT count(*) AS n_val,
   round(i.w0 + 5e-11, 4) AS w_value,
   round(i.w1 + 5e-11, 4) AS w_hb,
   round(i.w2 + 5e-11, 4) AS w_dowi
-FROM mt_$p mt CROSS JOIN u$p CROSS JOIN i6_$p i"""
+FROM mt_$p mt CROSS JOIN u$p CROSS JOIN g${p}_6 i"""
       s"""WITH sf AS ($featSql),
 sfp AS MATERIALIZED (
   SELECT *, (row_number() OVER (PARTITION BY y
@@ -4770,14 +4606,14 @@ db AS MATERIALIZED (SELECT CAST(value AS DOUBLE) AS x0, CAST(hb AS DOUBLE) AS x1
   CAST(dowi AS DOUBLE) AS x2, y::DOUBLE AS y FROM strn),
 da AS MATERIALIZED (SELECT * FROM db
   UNION ALL SELECT sx0, sx1, sx2, CAST(1.0 AS DOUBLE) FROM smsyn),
-stb AS (SELECT $statSel FROM db),
-sta AS (SELECT $statSel FROM da),
-zb AS MATERIALIZED (SELECT $stdSel, y FROM db, stb),
-za AS MATERIALIZED (SELECT $stdSel, y FROM da, sta),
+stb AS (SELECT ${sqlStats(idx)} FROM db),
+sta AS (SELECT ${sqlStats(idx)} FROM da),
+zb AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM db, stb),
+za AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM da, sta),
 vraw AS (SELECT CAST(value AS DOUBLE) AS x0, CAST(hb AS DOUBLE) AS x1,
   CAST(dowi AS DOUBLE) AS x2, y::DOUBLE AS y FROM sfp WHERE vb5 = 0),
-${chain("b", "zb")},
-${chain("a", "za")},
+${sqlGd("gb_", "zb", idx, 6, "0.5")},
+${sqlGd("ga_", "za", idx, 6, "0.5")},
 ${cell("b", "stb")},
 ${cell("a", "sta")}
 ${row("b", "baseline", "db")}
@@ -4896,25 +4732,8 @@ SELECT feature, v AS grid_value, round(pd + 5e-11, 4) AS pd FROM pd0"""
       // GD-chain replay on the train slice -> md5-order cyclic-shift
       // donor join -> baseline + one-feature-permuted midrank AUC each
       val idx = 0 until 3
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
       def marginOf(v: String, h: String, dw: String) =
         s"i6.b + i6.w0*(($v - s.m0)/s.s0) + i6.w1*(($h - s.m1)/s.s1) + i6.w2*(($dw - s.m2)/s.s2)"
-      val gd = (1 to 6).map { k =>
-        val p = "1.0/(1.0 + exp(-(i.b + i.w0 * d.x0 + i.w1 * d.x1 + i.w2 * d.x2)))"
-        val upd = idx.map(i =>
-          s"i.w$i - 0.5*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-          s",\n    i.b - 0.5*avg($p - d.y) AS b"
-        s"i$k AS MATERIALIZED (SELECT $upd\n  FROM dtr d, i${k - 1} i GROUP BY i.w0, i.w1, i.w2, i.b)"
-      }.mkString(",\n")
-      def aucBlock(tag: String, src: String): String =
-        s"""r_$tag AS (SELECT y, rank() OVER (ORDER BY sv) + (count(*) OVER (PARTITION BY sv) - 1)/2.0 AS midrank FROM $src),
-a_$tag AS (SELECT
-    CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-      (sum(CASE WHEN y = 1.0 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-    END AS auc
-  FROM r_$tag)"""
       def row(name: String, tag: String): String =
         s"""SELECT '$name' AS feature, nn.n AS n_test,
   round(a_b.auc + 5e-11, 4) AS auc_base, round(a_$tag.auc + 5e-11, 4) AS auc_perm,
@@ -4924,10 +4743,9 @@ FROM nn, a_b, a_$tag"""
 tr AS (SELECT CAST(value AS DOUBLE) AS x0, CAST(hb AS DOUBLE) AS x1,
   CAST(dowi AS DOUBLE) AS x2, CAST(y AS DOUBLE) AS y
   FROM f WHERE event_id % 5 <> 0),
-s AS MATERIALIZED (SELECT $statSel FROM tr),
-dtr AS MATERIALIZED (SELECT (x0 - m0)/s0 AS x0, (x1 - m1)/s1 AS x1, (x2 - m2)/s2 AS x2, y FROM tr, s),
-i0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS b),
-$gd,
+s AS MATERIALIZED (SELECT ${sqlStats(idx)} FROM tr),
+dtr AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM tr, s),
+${sqlGd("i", "dtr", idx, 6, "0.5")},
 held AS MATERIALIZED (SELECT event_id, CAST(y AS DOUBLE) AS y,
   CAST(value AS DOUBLE) AS value, CAST(hb AS DOUBLE) AS hb,
   CAST(dowi AS DOUBLE) AS dowi
@@ -4943,10 +4761,10 @@ scb AS (SELECT d.y, ${marginOf("d.value", "d.hb", "d.dowi")} AS sv FROM pm d, i6
 scv AS (SELECT d.y, ${marginOf("d.pv", "d.hb", "d.dowi")} AS sv FROM pm d, i6, s),
 sch AS (SELECT d.y, ${marginOf("d.value", "d.ph", "d.dowi")} AS sv FROM pm d, i6, s),
 scw AS (SELECT d.y, ${marginOf("d.value", "d.hb", "d.pd")} AS sv FROM pm d, i6, s),
-${aucBlock("b", "scb")},
-${aucBlock("v", "scv")},
-${aucBlock("h", "sch")},
-${aucBlock("w", "scw")}
+${sqlAuc("a_b", "scb", "sv")},
+${sqlAuc("a_v", "scv", "sv")},
+${sqlAuc("a_h", "sch", "sv")},
+${sqlAuc("a_w", "scw", "sv")}
 ${row("value", "v")}
 UNION ALL
 ${row("hb", "h")}
@@ -4958,41 +4776,17 @@ ${row("dowi", "w")}"""
       // size (stats from the masked slice) -> midrank AUC on the train
       // slice AND the shared stratified fold-0 holdout
       val idx = 0 until 3
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      def marginOf(it: String) =
-        s"$it.b + " + idx.map(i => s"$it.w$i * d.x$i").mkString(" + ")
-      def aucBlock(tag: String, src: String): String =
-        s"""r_$tag AS (SELECT y, rank() OVER (ORDER BY sv) + (count(*) OVER (PARTITION BY sv) - 1)/2.0 AS midrank FROM $src),
-a_$tag AS (SELECT
-    CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-      (sum(CASE WHEN y = 1.0 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-    END AS auc
-  FROM r_$tag)"""
-      def sizeChain(t: Int): String = {
-        val i0 = s"i0_$t AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-        val iters = (1 to 6).map { k =>
-          val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-          val upd = idx.map(i =>
-            s"i.w$i - 0.5*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-            s",\n    i.b - 0.5*avg($p - d.y) AS b"
-          val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b"
-          s"i${k}_$t AS MATERIALIZED (SELECT $upd\n  FROM dtr_$t d, i${k - 1}_$t i GROUP BY $grp)"
-        }.mkString(",\n")
+      def sizeChain(t: Int): String =
         s"""tr_$t AS (SELECT * FROM fp WHERE fold <> 0 AND fb < $t),
-s_$t AS (SELECT $statSel FROM tr_$t),
-dtr_$t AS MATERIALIZED (SELECT $stdSel, y FROM tr_$t, s_$t),
-dho_$t AS MATERIALIZED (SELECT $stdSel, y FROM (SELECT * FROM fp WHERE fold = 0) t, s_$t),
-$i0,
-$iters,
+s_$t AS (SELECT ${sqlStats(idx)} FROM tr_$t),
+dtr_$t AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM tr_$t, s_$t),
+dho_$t AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM (SELECT * FROM fp WHERE fold = 0) t, s_$t),
+${sqlGd(s"g${t}_", s"dtr_$t", idx, 6, "0.5")},
 n_$t AS (SELECT count(*) AS n, CAST(sum(y) AS BIGINT) AS npos FROM tr_$t),
-sct_$t AS (SELECT d.y, ${marginOf(s"i6_$t")} AS sv FROM dtr_$t d, i6_$t),
-scv_$t AS (SELECT d.y, ${marginOf(s"i6_$t")} AS sv FROM dho_$t d, i6_$t),
-${aucBlock(s"t$t", s"sct_$t")},
-${aucBlock(s"v$t", s"scv_$t")}"""
-      }
+sct_$t AS (SELECT d.y, ${sqlMargin(s"g${t}_6", idx)} AS sv FROM dtr_$t d, g${t}_6),
+scv_$t AS (SELECT d.y, ${sqlMargin(s"g${t}_6", idx)} AS sv FROM dho_$t d, g${t}_6),
+${sqlAuc(s"a_t$t", s"sct_$t", "sv")},
+${sqlAuc(s"a_v$t", s"scv_$t", "sv")}"""
       def sizeRow(t: Int): String =
         s"""SELECT ${t / 100.0} AS train_frac, n_$t.n AS n_train, n_$t.npos AS n_pos_train,
   round(a_t$t.auc + 5e-11, 4) AS auc_train, round(a_v$t.auc + 5e-11, 4) AS auc_val
@@ -5015,40 +4809,17 @@ ${sizes.map(sizeRow).mkString("\nUNION ALL\n")}"""
       // per-fold unrolled-GD replay on the event features -> per-fold
       // midrank AUC -> mean/std over the rounded fold scores
       val idx = 0 until 3
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      // b LEADS the sum — fitLogisticCV folds the margin from the
-      // intercept, so this text is bit-identical to the engine
-      def marginOf(it: String) =
-        s"$it.b + " + idx.map(i => s"$it.w$i * d.x$i").mkString(" + ")
-      def foldChain(f: Int): String = {
-        val i0 = s"i0_$f AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-        val iters = (1 to 6).map { k =>
-          val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-          val upd = idx.map(i =>
-            s"i.w$i - 0.5*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-            s",\n    i.b - 0.5*avg($p - d.y) AS b"
-          val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b"
-          s"i${k}_$f AS MATERIALIZED (SELECT $upd\n  FROM dtr_$f d, i${k - 1}_$f i GROUP BY $grp)"
-        }.mkString(",\n")
+      def foldChain(f: Int): String =
         s"""tr_$f AS (SELECT * FROM fp WHERE fold <> $f),
-s_$f AS (SELECT $statSel FROM tr_$f),
-dtr_$f AS MATERIALIZED (SELECT $stdSel, y FROM tr_$f, s_$f),
-dte_$f AS MATERIALIZED (SELECT $stdSel, y FROM (SELECT * FROM fp WHERE fold = $f) t, s_$f),
-$i0,
-$iters,
-sc_$f AS (SELECT d.y, ${marginOf(s"i6_$f")} AS sv FROM dte_$f d, i6_$f),
-r_$f AS (SELECT y, rank() OVER (ORDER BY sv) + (count(*) OVER (PARTITION BY sv) - 1)/2.0 AS midrank FROM sc_$f),
-a_$f AS (SELECT count(*) AS n, CAST(sum(y) AS BIGINT) AS npos,
-    CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-      (sum(CASE WHEN y = 1.0 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-    END AS auc
-  FROM r_$f)"""
-      }
+s_$f AS (SELECT ${sqlStats(idx)} FROM tr_$f),
+dtr_$f AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM tr_$f, s_$f),
+dte_$f AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM (SELECT * FROM fp WHERE fold = $f) t, s_$f),
+${sqlGd(s"g${f}_", s"dtr_$f", idx, 6, "0.5")},
+sc_$f AS (SELECT d.y, ${sqlMargin(s"g${f}_6", idx)} AS sv FROM dte_$f d, g${f}_6),
+${sqlAuc(s"a_$f", s"sc_$f", "sv")}"""
       def foldRow(f: Int): String =
-        s"SELECT $f AS fold, n AS n_test, npos AS n_pos, round(auc + 5e-11, 4) AS auc FROM a_$f"
+        s"""SELECT $f AS fold, n AS n_test, (SELECT CAST(sum(y) AS BIGINT) FROM sc_$f) AS n_pos,
+  ${sqlR4("auc")} AS auc FROM a_$f"""
       s"""WITH f AS ($featSql),
 fp AS MATERIALIZED (
   SELECT CAST(value AS DOUBLE) AS x0, CAST(hb AS DOUBLE) AS x1,
@@ -5070,13 +4841,6 @@ FROM allf, sm"""
       // unrolled-GD technique on the single calibration feature -> Brier
       // before/after on the evaluation half
       val fs = Seq("hb", "dowi", "vb")
-      val gd = (1 to 8).map { k =>
-        val p = s"1.0/(1.0 + exp(-(i.b + d.x*i.w)))"
-        s"""i$k AS MATERIALIZED (SELECT
-  i.w - 0.5*avg(($p - d.y) * d.x) AS w,
-  i.b - 0.5*avg($p - d.y) AS b
-  FROM dc d, i${k - 1} i GROUP BY i.w, i.b)"""
-      }.mkString(",\n")
       s"""WITH f AS ($featSql),
 tr AS (SELECT * FROM f WHERE event_id % 5 <> 0),
 te AS (SELECT * FROM f WHERE event_id % 5 = 0),
@@ -5092,19 +4856,15 @@ sc AS MATERIALIZED (
   SELECT event_id, y::DOUBLE AS y, round(delta + 5e-11, 4) AS d4 FROM scd),
 cal AS MATERIALIZED (SELECT * FROM sc WHERE event_id % 10 = 0),
 ev AS MATERIALIZED (SELECT * FROM sc WHERE event_id % 10 = 5),
-s0 AS MATERIALIZED (SELECT avg(d4) AS m,
-  coalesce(nullif(stddev_pop(d4), 0.0), 1.0) AS sd FROM cal),
-dc AS MATERIALIZED (SELECT (d4 - m)/sd AS x, y FROM cal, s0),
-i0 AS (SELECT 0.0 AS w, 0.0 AS b),
-$gd,
+$plattFitSql,
 br AS (SELECT count(*) AS n_eval,
   round(avg((round(1.0/(1.0 + exp(-d.d4)) + 5e-11, 4) - d.y)
           * (round(1.0/(1.0 + exp(-d.d4)) + 5e-11, 4) - d.y)) + 5e-11, 4) AS brier_raw,
-  round(avg((round(1.0/(1.0 + exp(-(i.b + (d.d4 - s.m)/s.sd*i.w))) + 5e-11, 4) - d.y)
-          * (round(1.0/(1.0 + exp(-(i.b + (d.d4 - s.m)/s.sd*i.w))) + 5e-11, 4) - d.y)) + 5e-11, 4) AS brier_cal
-  FROM ev d, i8 i, s0 s),
+  round(avg((round(1.0/(1.0 + exp(-(i.b + (d.d4 - s.m0)/s.s0*i.w0))) + 5e-11, 4) - d.y)
+          * (round(1.0/(1.0 + exp(-(i.b + (d.d4 - s.m0)/s.s0*i.w0))) + 5e-11, 4) - d.y)) + 5e-11, 4) AS brier_cal
+  FROM ev d, i8 i, ps s),
 nc AS (SELECT count(*) AS n_cal FROM cal)
-SELECT nc.n_cal, br.n_eval, round(i.w + 5e-11, 4) AS a,
+SELECT nc.n_cal, br.n_eval, round(i.w0 + 5e-11, 4) AS a,
   round(i.b + 5e-11, 4) AS b, br.brier_raw, br.brier_cal
 FROM nc, br, i8 i"""
     },
@@ -5122,7 +4882,7 @@ FROM nc, br, i8 i"""
           s"""sc$pfx$t AS MATERIALIZED (
   SELECT vld.y, ${gbtScore(t, "vld", pfx)} AS s
   FROM vld CROSS JOIN f0${gbtJoins(t + 1, pfx)}),
-${gbMidrankAuc(s"$pfx$t", s"sc$pfx$t")}"""
+${sqlAuc(s"u$pfx$t", s"sc$pfx$t", "s")}"""
         }
       }.mkString(",\n")
       val rows = rateCells.flatMap { case (rate, pfx) =>
@@ -5156,13 +4916,6 @@ FROM cells a"""
       // EVAL rows themselves: per event the raw sigmoid posterior and
       // the Platt-calibrated risk_score the streaming path serves
       val fs = Seq("hb", "dowi", "vb")
-      val gd = (1 to 8).map { k =>
-        val p = s"1.0/(1.0 + exp(-(i.b + d.x*i.w)))"
-        s"""i$k AS MATERIALIZED (SELECT
-  i.w - 0.5*avg(($p - d.y) * d.x) AS w,
-  i.b - 0.5*avg($p - d.y) AS b
-  FROM dc d, i${k - 1} i GROUP BY i.w, i.b)"""
-      }.mkString(",\n")
       s"""WITH f AS ($featSql),
 tr AS (SELECT * FROM f WHERE event_id % 5 <> 0),
 te AS (SELECT * FROM f WHERE event_id % 5 = 0),
@@ -5177,15 +4930,11 @@ scd AS (
 sc AS MATERIALIZED (
   SELECT event_id, CAST(y AS BIGINT) AS y, round(delta + 5e-11, 4) AS d4 FROM scd),
 cal AS MATERIALIZED (SELECT event_id, y::DOUBLE AS y, d4 FROM sc WHERE event_id % 10 = 0),
-s0 AS MATERIALIZED (SELECT avg(d4) AS m,
-  coalesce(nullif(stddev_pop(d4), 0.0), 1.0) AS sd FROM cal),
-dc AS MATERIALIZED (SELECT (d4 - m)/sd AS x, y FROM cal, s0),
-i0 AS (SELECT 0.0 AS w, 0.0 AS b),
-$gd
+$plattFitSql
 SELECT e.event_id, e.y, e.d4,
   round(1.0/(1.0 + exp(-e.d4)) + 5e-11, 4) AS p_raw,
-  round(1.0/(1.0 + exp(-(i.b + (e.d4 - s.m)/s.sd*i.w))) + 5e-11, 4) AS risk_score
-FROM sc e CROSS JOIN i8 i CROSS JOIN s0 s
+  round(1.0/(1.0 + exp(-(i.b + (e.d4 - s.m0)/s.s0*i.w0))) + 5e-11, 4) AS risk_score
+FROM sc e CROSS JOIN i8 i CROSS JOIN ps s
 WHERE e.event_id % 10 = 5"""
     },
     "q250_nb_platt_store" -> locally {
@@ -5193,18 +4942,10 @@ WHERE e.event_id % 10 = 5"""
       // layout after the engine's disk round trip; n_agree = n_scored
       // asserts the rebuilt serving column's exact parity in-engine
       val fs = Seq("hb", "dowi", "vb")
-      val gd = (1 to 8).map { k =>
-        val p = s"1.0/(1.0 + exp(-(i.b + d.x*i.w)))"
-        s"""i$k AS MATERIALIZED (SELECT
-  i.w - 0.5*avg(($p - d.y) * d.x) AS w,
-  i.b - 0.5*avg($p - d.y) AS b
-  FROM dc d, i${k - 1} i GROUP BY i.w, i.b)"""
-      }.mkString(",\n")
-      def rr(e: String) = s"round($e + 5e-11, 4)"
       val likeRows = fs.zipWithIndex.map { case (f, fi) =>
         s"""SELECT 'nbp' AS model_id, 'nb_platt' AS kind, 'like' AS part,
   CAST($fi * 1000000 + rn - 1 AS BIGINT) AS idx, CAST('$f' AS VARCHAR) AS k,
-  ${rr("c1v")} AS v1, ${rr("c0v")} AS v2, CAST(NULL AS DOUBLE) AS v3,
+  ${sqlR4("c1v")} AS v1, ${sqlR4("c0v")} AS v2, CAST(NULL AS DOUBLE) AS v3,
   CAST(v AS BIGINT) AS c1, CAST($fi AS BIGINT) AS c2,
   mc.n AS n_scored, mc.n AS n_agree
 FROM (SELECT v, c1 AS c1v, c0 AS c0v,
@@ -5224,28 +4965,24 @@ scd AS (
 sc AS MATERIALIZED (
   SELECT event_id, CAST(y AS BIGINT) AS y, round(delta + 5e-11, 4) AS d4 FROM scd),
 cal AS MATERIALIZED (SELECT event_id, y::DOUBLE AS y, d4 FROM sc WHERE event_id % 10 = 0),
-s0 AS MATERIALIZED (SELECT avg(d4) AS m,
-  coalesce(nullif(stddev_pop(d4), 0.0), 1.0) AS sd FROM cal),
-dc AS MATERIALIZED (SELECT (d4 - m)/sd AS x, y FROM cal, s0),
-i0 AS (SELECT 0.0 AS w, 0.0 AS b),
-$gd,
+$plattFitSql,
 mc AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f WHERE event_id % 10 = 5)
 SELECT CAST('nbp' AS VARCHAR) AS model_id, CAST('nb_platt' AS VARCHAR) AS kind,
   CAST('prior' AS VARCHAR) AS part, CAST(0 AS BIGINT) AS idx,
-  CAST(NULL AS VARCHAR) AS k, ${rr("pr.n1")} AS v1, ${rr("pr.n0")} AS v2,
+  CAST(NULL AS VARCHAR) AS k, ${sqlR4("pr.n1")} AS v1, ${sqlR4("pr.n0")} AS v2,
   CAST(NULL AS DOUBLE) AS v3, CAST(NULL AS BIGINT) AS c1,
   CAST(NULL AS BIGINT) AS c2, mc.n AS n_scored, mc.n AS n_agree
 FROM pr CROSS JOIN mc
 UNION ALL
 SELECT 'nbp', 'nb_platt', 'cal_meta', CAST(0 AS BIGINT), CAST(NULL AS VARCHAR),
-  ${rr("i.b")}, CAST(0.5 AS DOUBLE), CAST(NULL AS DOUBLE),
+  ${sqlR4("i.b")}, CAST(0.5 AS DOUBLE), CAST(NULL AS DOUBLE),
   CAST(8 AS BIGINT), CAST(NULL AS BIGINT), mc.n, mc.n
 FROM i8 i CROSS JOIN mc
 UNION ALL
 SELECT 'nbp', 'nb_platt', 'cal_feature', CAST(0 AS BIGINT), CAST('d4' AS VARCHAR),
-  ${rr("s.m")}, ${rr("s.sd")}, ${rr("i.w")},
+  ${sqlR4("s.m0")}, ${sqlR4("s.s0")}, ${sqlR4("i.w0")},
   CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), mc.n, mc.n
-FROM i8 i CROSS JOIN s0 s CROSS JOIN mc
+FROM i8 i CROSS JOIN ps s CROSS JOIN mc
 UNION ALL
 $likeRows"""
     },

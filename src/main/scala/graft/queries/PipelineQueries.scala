@@ -178,6 +178,28 @@ object PipelineQueries extends QueryPack {
         .select(col("transaction_id") +: col("customer_id") +: roundCols: _*)
     })
 
+  /** The q165/q172 training rows: every 10th event becomes a label probe
+    * 30 minutes later, with trailing 1h/24h count and sum features x0..x3
+    * over the events at or before it.
+    */
+  private val lrProbesSql = """probes AS (
+  SELECT event_id AS probe_id, user_id, epoch_us(ts) + 1800000000 AS tm,
+    CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END AS y
+  FROM events WHERE event_id % 10 = 0),
+u AS (
+  SELECT user_id, epoch_us(ts) AS tm, value AS amount, NULL::BIGINT AS probe_id, NULL::DOUBLE AS y FROM events
+  UNION ALL
+  SELECT user_id, tm, NULL::DOUBLE, probe_id, y FROM probes),
+fw AS (
+  SELECT probe_id, y,
+    count(amount) OVER w1h AS x0,
+    coalesce(sum(amount) OVER w1h, 0.0) AS x1,
+    count(amount) OVER w24h AS x2,
+    coalesce(sum(amount) OVER w24h, 0.0) AS x3
+  FROM u
+  WINDOW w1h AS (PARTITION BY user_id ORDER BY tm RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW),
+         w24h AS (PARTITION BY user_id ORDER BY tm RANGE BETWEEN 86399999999 PRECEDING AND CURRENT ROW)),"""
+
   override val oracle: Map[String, String] = Map(
     // q165's unrolled-GD technique, once per fold: each fold gets its own
     // standardization (train moments only), its own 10-step MATERIALIZED
@@ -185,125 +207,44 @@ object PipelineQueries extends QueryPack {
     // with the TRAIN stats — the exact leave-one-fold-out contract.
     "q172_cv_lr" -> {
       val idx = lrFeatures.indices
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      def marginOf(it: String) =
-        idx.map(i => s"$it.w$i * d.x$i").mkString(" + ") + s" + $it.b"
-      def foldChain(f: Int): String = {
-        val i0 = s"i0_$f AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-        val iters = (1 to cvIters).map { k =>
-          val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-          val upd = idx.map(i =>
-            s"i.w$i - $lrRate*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-            s",\n    i.b - $lrRate*avg($p - d.y) AS b"
-          val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b"
-          s"i${k}_$f AS MATERIALIZED (SELECT $upd\n  FROM dtr_$f d, i${k - 1}_$f i GROUP BY $grp)"
-        }.mkString(",\n")
+      def foldChain(f: Int): String =
         s"""tr_$f AS (SELECT * FROM fp WHERE fold <> $f),
-s_$f AS (SELECT $statSel FROM tr_$f),
-dtr_$f AS MATERIALIZED (SELECT $stdSel, y FROM tr_$f, s_$f),
-dte_$f AS MATERIALIZED (SELECT $stdSel, y FROM (SELECT * FROM fp WHERE fold = $f) t, s_$f),
-$i0,
-$iters,
-sc_$f AS (SELECT d.y, ${marginOf(s"i$cvIters" + s"_$f")} AS sv FROM dte_$f d, i${cvIters}_$f),
-r_$f AS (SELECT y, rank() OVER (ORDER BY sv) + (count(*) OVER (PARTITION BY sv) - 1)/2.0 AS midrank FROM sc_$f),
-a_$f AS (SELECT count(*) AS n,
-    CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-      (sum(CASE WHEN y = 1.0 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-    END AS auc
-  FROM r_$f)"""
-      }
+s_$f AS (SELECT ${sqlStats(idx)} FROM tr_$f),
+dtr_$f AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM tr_$f, s_$f),
+dte_$f AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM (SELECT * FROM fp WHERE fold = $f) t, s_$f),
+${sqlGd(s"g${f}_", s"dtr_$f", idx, cvIters, lrRate.toString)},
+sc_$f AS (SELECT d.y, ${sqlMargin(s"g${f}_$cvIters", idx)} AS sv FROM dte_$f d, g${f}_$cvIters),
+${sqlAuc(s"a_$f", s"sc_$f", "sv")}"""
       def foldRow(f: Int): String = {
         val ws = lrFeatures.zipWithIndex.map { case (c, i) =>
-          s"round(i.w$i + 5e-11, 4) AS w_$c" }.mkString(",\n  ")
-        s"""SELECT $f AS fold, a.n AS n_test, round(a.auc + 5e-11, 4) AS auc,
-  round(i.b + 5e-11, 4) AS intercept,
+          s"${sqlR4(s"i.w$i")} AS w_$c" }.mkString(",\n  ")
+        s"""SELECT $f AS fold, a.n AS n_test, ${sqlR4("a.auc")} AS auc,
+  ${sqlR4("i.b")} AS intercept,
   $ws
-FROM a_$f a, i${cvIters}_$f i"""
+FROM a_$f a, g${f}_$cvIters i"""
       }
-      s"""WITH probes AS (
-  SELECT event_id AS probe_id, user_id, epoch_us(ts) + 1800000000 AS tm,
-    CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END AS y
-  FROM events WHERE event_id % 10 = 0),
-u AS (
-  SELECT user_id, epoch_us(ts) AS tm, value AS amount, NULL::BIGINT AS probe_id, NULL::DOUBLE AS y FROM events
-  UNION ALL
-  SELECT user_id, tm, NULL::DOUBLE, probe_id, y FROM probes),
-fw AS (
-  SELECT probe_id, y,
-    count(amount) OVER w1h AS x0,
-    coalesce(sum(amount) OVER w1h, 0.0) AS x1,
-    count(amount) OVER w24h AS x2,
-    coalesce(sum(amount) OVER w24h, 0.0) AS x3
-  FROM u
-  WINDOW w1h AS (PARTITION BY user_id ORDER BY tm RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW),
-         w24h AS (PARTITION BY user_id ORDER BY tm RANGE BETWEEN 86399999999 PRECEDING AND CURRENT ROW)),
+      s"""WITH $lrProbesSql
 fp AS MATERIALIZED (
   SELECT *, ('0x' || substr(md5('cv:' || probe_id), 1, 8))::UBIGINT % $cvFolds AS fold
   FROM fw WHERE probe_id IS NOT NULL),
 ${(0 until cvFolds).map(foldChain).mkString(",\n")}
 ${(0 until cvFolds).map(foldRow).mkString("\nUNION ALL\n")}"""
     },
-    // the SAME optimizer, unrolled: standardize, 20 fixed-rate full-batch
-    // GD steps as chained CTEs (aggregates are illegal in a recursive CTE
-    // term — same technique as kcoreSql). Every iteration is ONE CTE
-    // (gradient aggregate + weight update fused via GROUP BY over the
-    // 1-row weight state) so each CTE is referenced exactly once, and the
-    // data frame + weight states are MATERIALIZED — multi-referenced
-    // plain CTEs inline and the plan blows up exponentially (the q121
-    // lesson). Mid-rank AUC on the margins.
+    // the SAME optimizer, unrolled by sqlGd: standardize, 20 fixed-rate
+    // full-batch GD steps, mid-rank AUC on the margins
     "q165_train_lr" -> {
       val idx = lrFeatures.indices
-      val statSel = idx.map(i =>
-        s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val stdSel = idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
-      val i0 = s"i0 AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-      def marginOf(it: String) =
-        idx.map(i => s"$it.w$i * d.x$i").mkString(" + ") + s" + $it.b"
-      val iterCtes = (1 to lrIters).map { k =>
-        val p = s"1.0/(1.0 + exp(-(${marginOf("i")})))"
-        val upd = idx.map(i =>
-          s"i.w$i - $lrRate*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-          s",\n    i.b - $lrRate*avg($p - d.y) AS b"
-        val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b"
-        s"i$k AS MATERIALIZED (SELECT $upd\n  FROM d, i${k - 1} i GROUP BY $grp)"
-      }.mkString(",\n")
-      val fin = s"i$lrIters"
+      val fin = s"g$lrIters"
       val wOut = lrFeatures.zipWithIndex.map { case (f, i) =>
-        s"round($fin.w$i + 5e-11, 4) AS w_$f" }.mkString(",\n  ")
-      s"""WITH probes AS (
-  SELECT event_id AS probe_id, user_id, epoch_us(ts) + 1800000000 AS tm,
-    CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END AS y
-  FROM events WHERE event_id % 10 = 0),
-u AS (
-  SELECT user_id, epoch_us(ts) AS tm, value AS amount, NULL::BIGINT AS probe_id, NULL::DOUBLE AS y FROM events
-  UNION ALL
-  SELECT user_id, tm, NULL::DOUBLE, probe_id, y FROM probes),
-fw AS (
-  SELECT probe_id, y,
-    count(amount) OVER w1h AS x0,
-    coalesce(sum(amount) OVER w1h, 0.0) AS x1,
-    count(amount) OVER w24h AS x2,
-    coalesce(sum(amount) OVER w24h, 0.0) AS x3
-  FROM u
-  WINDOW w1h AS (PARTITION BY user_id ORDER BY tm RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW),
-         w24h AS (PARTITION BY user_id ORDER BY tm RANGE BETWEEN 86399999999 PRECEDING AND CURRENT ROW)),
+        s"${sqlR4(s"$fin.w$i")} AS w_$f" }.mkString(",\n  ")
+      s"""WITH $lrProbesSql
 fp AS (SELECT * FROM fw WHERE probe_id IS NOT NULL),
-s AS (SELECT $statSel FROM fp),
-d AS MATERIALIZED (SELECT $stdSel, y FROM fp, s),
-$i0,
-$iterCtes,
-sc AS (SELECT d.y, ${marginOf(fin)} AS sv FROM d, $fin),
-r AS (SELECT y, rank() OVER (ORDER BY sv) + (count(*) OVER (PARTITION BY sv) - 1)/2.0 AS midrank FROM sc),
-a AS (SELECT count(*) AS n,
-    CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
-      (sum(CASE WHEN y = 1.0 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
-    END AS auc
-  FROM r)
-SELECT n, round(auc + 5e-11, 4) AS auc, round($fin.b + 5e-11, 4) AS intercept,
+s AS (SELECT ${sqlStats(idx)} FROM fp),
+d AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM fp, s),
+${sqlGd("g", "d", idx, lrIters, lrRate.toString)},
+sc AS (SELECT d.y, ${sqlMargin(fin, idx)} AS sv FROM d, $fin),
+${sqlAuc("a", "sc", "sv")}
+SELECT n, ${sqlR4("auc")} AS auc, ${sqlR4(s"$fin.b")} AS intercept,
   $wOut
 FROM a, $fin"""
     },

@@ -373,10 +373,8 @@ SELECT count(*) AS n_batch,
   CAST(sum(CASE WHEN predicted_label IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing_predicted_label
 FROM v""",
     "q23_label_metrics" ->
-      """WITH s AS (SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y, value AS sc FROM events),
-r AS (SELECT y, rank() OVER (ORDER BY sc) + (count(*) OVER (PARTITION BY sc) - 1)/2.0 AS midrank FROM s),
-a AS (SELECT (sum(CASE WHEN y = 1 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0)
-        / (sum(y)*(count(*) - sum(y))) AS auc FROM r),
+      s"""WITH s AS (SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y, value AS sc FROM events),
+${sqlAuc("a", "s", "sc")},
 acc AS (SELECT avg(CASE WHEN (value > 100.0) = (event_type = 'error') THEN 1.0 ELSE 0.0 END) AS accuracy FROM events)
 SELECT round(a.auc+ 5e-11, 4) AS auc, round(acc.accuracy+ 5e-11, 4) AS accuracy FROM a CROSS JOIN acc""",
     "q136_segment_auc" ->

@@ -399,7 +399,7 @@ sig AS (SELECT doc_id,
           lit(rows2.count(_.kind == "manifest").toLong))
       import s.implicits._
       val reexp = ModelStore.perplexityGateRows("cur", 1L,
-        ModelStore.perplexityGateOf(ServedModel.body(rows2)))
+        ModelStore.perplexityGateOf(ModelStore.body(rows2)))
       val nLm = reexp.count(_.part == "lm").toLong
       reexp.filterNot(_.part == "lm").toDF()
         .select(col("model_id"), col("kind"), col("part"), col("idx"),
@@ -2212,12 +2212,8 @@ er AS MATERIALIZED (
   SELECT CAST(e.label AS BIGINT) AS label,
     round(sc.xx - 2 * sc.xm + cmm.mm$projTerms + 5e-11, 4) AS err
   FROM sc JOIN embeddings e ON sc.vec_id = e.vec_id, cmm, $mvFrom),
-rk AS (SELECT (label <> 0)::INT AS y,
-    rank() OVER (ORDER BY err) + (count(*) OVER (PARTITION BY err) - 1)/2.0 AS midrank
-  FROM er),
-auc AS (SELECT round(
-    (sum(CASE WHEN y = 1 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0)
-      / (sum(y)*(count(*) - sum(y))) + 5e-11, 4) AS auc FROM rk)
+${sqlAuc("au", "(SELECT (label <> 0)::INT AS y, err FROM er)", "err")},
+auc AS (SELECT ${sqlR4("auc")} AS auc FROM au)
 SELECT er.label, count(*) AS n,
   round(avg(err) + 5e-11, 4) AS mean_err,
   round(stddev_pop(err) + 5e-11, 4) AS std_err,
@@ -2757,25 +2753,10 @@ FROM bn LEFT JOIN pd ON bn.doc_id = pd.doc_id""",
       val B = 16
       val iters = 6
       val idx = 0 until B
-      val statSel = idx.map(i =>
-        s"avg(f$i) AS m$i, coalesce(nullif(stddev_pop(f$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val i0 = s"i0 AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-      def marginOf(it: String, d: String) =
-        idx.map(i => s"$it.w$i * $d.x$i").mkString(" + ") + s" + $it.b"
-      val iterCtes = (1 to iters).map { k =>
-        val p = s"1.0/(1.0 + exp(-(${marginOf("i", "d")})))"
-        val upd = idx.map(i =>
-          s"i.w$i - 0.5*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-          s",\n    i.b - 0.5*avg($p - d.y) AS b"
-        val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b"
-        s"i$k AS MATERIALIZED (SELECT $upd\n  FROM d, i${k - 1} i GROUP BY $grp)"
-      }.mkString(",\n")
       val pfSel = idx.map(i =>
         s"sum(CASE WHEN b = $i THEN 1 ELSE 0 END)::DOUBLE / count(*) AS f$i")
         .mkString(",\n    ")
-      val featSel = idx.map(i => s"coalesce(pf.f$i, 0.0) AS f$i").mkString(", ")
-      val stdSel = idx.map(i => s"(t.f$i - m$i)/s$i AS x$i").mkString(", ")
+      val featSel = idx.map(i => s"coalesce(pf.f$i, 0.0) AS x$i").mkString(", ")
       s"""WITH tok AS (
   SELECT doc_id,
     coalesce(regexp_extract_all(lower(text), '\\S+'), CAST([] AS VARCHAR[])) AS toks
@@ -2801,13 +2782,12 @@ feats AS MATERIALIZED (
   FROM lab l LEFT JOIN pf ON l.doc_id = pf.doc_id),
 tr AS (SELECT * FROM feats
   WHERE ('0x' || substr(md5('hq:' || doc_id), 1, 8))::UBIGINT % 5 <> 0),
-s AS MATERIALIZED (SELECT $statSel FROM tr),
-d AS MATERIALIZED (SELECT ${idx.map(i => s"(f$i - m$i)/s$i AS x$i").mkString(", ")}, y FROM tr, s),
-$i0,
-$iterCtes,
-da AS (SELECT t.doc_id, t.y, $stdSel FROM feats t, s),
+s AS MATERIALIZED (SELECT ${sqlStats(idx)} FROM tr),
+d AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM tr, s),
+${sqlGd("i", "d", idx, iters, "0.5")},
+da AS (SELECT t.doc_id, t.y, ${sqlStd(idx)} FROM feats t, s),
 sc AS (SELECT doc_id, CAST(y AS BIGINT) AS y,
-  round(${marginOf(s"i$iters", "da")} + 5e-11, 4) AS s
+  ${sqlR4(sqlMargin(s"i$iters", idx, "da"))} AS s
   FROM da, i$iters)
 SELECT doc_id, y, s, CAST(CASE WHEN s > 0 THEN 1 ELSE 0 END AS BIGINT) AS pred
 FROM sc"""
@@ -4567,25 +4547,10 @@ GROUP BY 1""",
       val B = 16
       val iters = 6
       val idx = 0 until B
-      val statSel = idx.map(i =>
-        s"avg(f$i) AS m$i, coalesce(nullif(stddev_pop(f$i), 0.0), 1.0) AS s$i")
-        .mkString(",\n    ")
-      val i0 = s"i0 AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
-      def marginOf(it: String, d: String) =
-        idx.map(i => s"$it.w$i * $d.x$i").mkString(" + ") + s" + $it.b"
-      val iterCtes = (1 to iters).map { k =>
-        val p = s"1.0/(1.0 + exp(-(${marginOf("i", "d")})))"
-        val upd = idx.map(i =>
-          s"i.w$i - 0.5*avg(($p - d.y) * d.x$i) AS w$i").mkString(",\n    ") +
-          s",\n    i.b - 0.5*avg($p - d.y) AS b"
-        val grp = idx.map(i => s"i.w$i").mkString(", ") + ", i.b"
-        s"i$k AS MATERIALIZED (SELECT $upd\n  FROM d, i${k - 1} i GROUP BY $grp)"
-      }.mkString(",\n")
       val pfSel = idx.map(i =>
         s"sum(CASE WHEN b = $i THEN 1 ELSE 0 END)::DOUBLE / count(*) AS f$i")
         .mkString(",\n    ")
-      val featSel = idx.map(i => s"coalesce(pf.f$i, 0.0) AS f$i").mkString(", ")
-      val stdSel = idx.map(i => s"(t.f$i - m$i)/s$i AS x$i").mkString(", ")
+      val featSel = idx.map(i => s"coalesce(pf.f$i, 0.0) AS x$i").mkString(", ")
       val ndSums = (0 until 32).map { j =>
         s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS s$j"
       }.mkString(",\n    ")
@@ -4653,13 +4618,12 @@ feats AS MATERIALIZED (
   FROM lab l LEFT JOIN pf ON l.doc_id = pf.doc_id),
 qtr AS (SELECT * FROM feats
   WHERE ('0x' || substr(md5('hq:' || doc_id), 1, 8))::UBIGINT % 5 <> 0),
-s AS MATERIALIZED (SELECT $statSel FROM qtr),
-d AS MATERIALIZED (SELECT ${idx.map(i => s"(f$i - m$i)/s$i AS x$i").mkString(", ")}, y FROM qtr, s),
-$i0,
-$iterCtes,
-da AS (SELECT t.doc_id, $stdSel FROM feats t, s),
+s AS MATERIALIZED (SELECT ${sqlStats(idx)} FROM qtr),
+d AS MATERIALIZED (SELECT ${sqlStd(idx)}, y FROM qtr, s),
+${sqlGd("i", "d", idx, iters, "0.5")},
+da AS (SELECT t.doc_id, ${sqlStd(idx)} FROM feats t, s),
 qsc AS MATERIALIZED (SELECT doc_id,
-  round(${marginOf(s"i$iters", "da")} + 5e-11, 4) AS s
+  ${sqlR4(sqlMargin(s"i$iters", idx, "da"))} AS s
   FROM da, i$iters),
 lmb AS (SELECT doc_id, lower(regexp_replace(text, '\\s+', ' ', 'g')) AS t FROM mdocs),
 lmx AS (SELECT doc_id, substr(t, i, 3) AS tri

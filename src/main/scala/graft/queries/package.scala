@@ -70,6 +70,61 @@ package object queries {
     */
   def r6z(c: Column): Column = rnd(c, 1e4, 5e-11) + lit(0.0)
 
+  /** The oracle SQL side of [[r6]]: DuckDB's round with the same nudge. */
+  private[queries] def sqlR4(x: String): String = s"round($x + 5e-11, 4)"
+
+  // DuckDB twins of graft.scoring.Trainer for the logistic oracles. They
+  // read features x0..x{d-1} and a 0.0/1.0 label y, and keep a weight
+  // state as one row (w0..w{d-1}, b) in standardized space.
+
+  /** Trainer.standardized's stats pass: population mean m$i and stddev
+    * s$i of each x$i, a constant column getting stddev 1.
+    */
+  private[queries] def sqlStats(idx: Seq[Int]): String =
+    idx.map(i => s"avg(x$i) AS m$i, coalesce(nullif(stddev_pop(x$i), 0.0), 1.0) AS s$i")
+      .mkString(",\n    ")
+
+  /** The standardized features, over a row of [[sqlStats]]. */
+  private[queries] def sqlStd(idx: Seq[Int]): String =
+    idx.map(i => s"(x$i - m$i)/s$i AS x$i").mkString(", ")
+
+  /** Trainer.margin's association: the intercept, then each weight times
+    * its feature, added left to right. `w` is the weight state, `d` the
+    * standardized row.
+    */
+  private[queries] def sqlMargin(w: String, idx: Seq[Int], d: String = "d"): String =
+    (s"$w.b" +: idx.map(i => s"$w.w$i * $d.x$i")).mkString(" + ")
+
+  /** Trainer.fitLogistic unrolled into CTEs: `${name}0` is the all-zero
+    * state and `${name}k` the state after k full-batch steps over `src`
+    * at `rate` (a SQL scalar). Aggregates are illegal in a recursive
+    * CTE, so each step is one CTE, the gradient aggregate and the update
+    * fused by grouping on the 1-row previous state. Every state is
+    * MATERIALIZED: a multi-referenced plain CTE inlines, and the plan
+    * grows exponentially with the chain.
+    */
+  private[queries] def sqlGd(name: String, src: String, idx: Seq[Int],
+      iters: Int, rate: String): String = {
+    val p = s"1.0/(1.0 + exp(-(${sqlMargin("i", idx)})))"
+    val upd = idx.map(i => s"i.w$i - $rate*avg(($p - d.y) * d.x$i) AS w$i") :+
+      s"i.b - $rate*avg($p - d.y) AS b"
+    val grp = (idx.map(i => s"i.w$i") :+ "i.b").mkString(", ")
+    val zero = s"${name}0 AS (SELECT ${idx.map(i => s"0.0 AS w$i").mkString(", ")}, 0.0 AS b)"
+    (zero +: (1 to iters).map(k =>
+      s"$name$k AS MATERIALIZED (SELECT ${upd.mkString(",\n    ")}\n  FROM $src d, $name${k - 1} i GROUP BY $grp)"))
+      .mkString(",\n")
+  }
+
+  /** Mid-rank (Wilcoxon) AUC of `score` over `src` (which has y in
+    * {0, 1}): `${name}_r` holds each row's midrank, `name` the row count
+    * n and the auc, NULL when a class is absent.
+    */
+  private[queries] def sqlAuc(name: String, src: String, score: String): String =
+    s"""${name}_r AS (SELECT y, rank() OVER (ORDER BY $score) + (count(*) OVER (PARTITION BY $score) - 1)/2.0 AS midrank FROM $src),
+$name AS (SELECT count(*) AS n, CASE WHEN sum(y) > 0 AND sum(y) < count(*) THEN
+    (sum(CASE WHEN y = 1 THEN midrank END) - sum(y)*(sum(y) + 1)/2.0) / (sum(y)*(count(*) - sum(y)))
+  END AS auc FROM ${name}_r)"""
+
   /** Spread an under-parallel input across the session's default
     * parallelism before compute-dense per-row work (trigram explodes,
     * regex batteries): a small parquet file arrives as ONE scan split,

@@ -52,10 +52,15 @@ case class StreamFeatures(
   * slice, emits one row, and the state is pruned to the newest event's
   * 7-day horizon. State is O(events in 7 d) per key, pruning is O(expired).
   *
-  * Contract (asserted in StreamingSpec): for watermark-conformant input,
-  * the emitted rows EQUAL the batch `CoreFeatures.customerFeatures`
-  * result on the same events — the batch range-frame operator is the
-  * correctness oracle for this processor.
+  * The batch range-frame operator (`CoreFeatures.customerFeatures`) is
+  * the correctness oracle for this processor, within what the tests
+  * check. StreamingSpec feeds both the same events in two ordered
+  * micro-batches: the counts, distinct counts, night and weekend counts
+  * match exactly, and `txn_amount_sum_1h` and `amount_deviation_score_1h`
+  * match after rounding to 6 dp. They are not bit-equal in general: the
+  * std here is a two-pass sum of squares, Spark's `stddev_pop` a Welford
+  * fold. The other sums, averages, maxima and the velocity score are not
+  * compared with the batch view.
   */
 class CustomerFeatureProcessor extends StatefulProcessor[Long, StreamTxn, StreamFeatures] {
   import CustomerFeatureProcessor._
@@ -105,9 +110,11 @@ object CustomerFeatureProcessor {
     * O(n) filter scan per event), and the long-window integer counts
     * (night 24h / weekend 7d) come from prefix sums — O(1) per event.
     * Float aggregates still accumulate left-to-right over the exact frame
-    * slice, so results stay bit-equal to the batch range-frame operator
-    * (the O(state)-per-event rescan was the reference's own anti-pattern,
-    * SURVEY §4.1).
+    * slice, so every field is bit-equal to the per-event [[features]]
+    * (PropertySpec checks this on random sequences); how both compare
+    * with the batch range-frame operator is stated on the processor
+    * class. The O(state)-per-event rescan was the reference's own
+    * anti-pattern (SURVEY §4.1).
     */
   def featuresBatch(incoming: Array[StreamTxn], all: Array[StreamTxn]): Iterator[StreamFeatures] = {
     val n = all.length

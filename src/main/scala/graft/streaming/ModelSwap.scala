@@ -5,101 +5,6 @@ import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 import graft.scoring.{AdaBoost, Boosting, ModelStore, Trainer, Trees}
 
-/** Micro-batch model hot-swap — the engine twin of the reference
-  * retrainer's save-then-RELOAD lifecycle (`feedback/feedback_system.py:
-  * 308-388` retrains, joblib-dumps, and the serving process picks the
-  * new estimator up without a restart). The stateless scorers in
-  * [[StreamingFeatures]] bake the model literals in at plan-build; this
-  * wrapper instead re-resolves `latestVersion` from the versioned
-  * [[graft.scoring.ModelStore]] parquet table at every micro-batch, so
-  * a version promoted BETWEEN batches starts scoring at the next batch
-  * boundary — the foreachBatch body is the swap point.
-  *
-  * Cost model: the per-batch check is ONE driver-side aggregate over the
-  * model table (O(model parts) rows of narrow parquet — never fact-table
-  * sized), and the literal CASE/linear chain is rebuilt only when the
-  * version actually moves; an unchanged version reuses the cached model,
-  * so steady state adds one footer-read + 1-row max() per batch.
-  *
-  * Usage (the spec's wiring):
-  * {{{
-  *   val swap = new HotSwapLogistic(storePath, "fraud_lr")
-  *   features.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-  *     sink(swap.scoreBatch(b))
-  *   }
-  * }}}
-  */
-final class HotSwapLogistic(storePath: String, modelId: String)
-    extends Serializable {
-
-  // (version, rebuilt model) — foreachBatch bodies run on the driver
-  // sequentially per query, but volatile keeps multi-query sharing safe
-  @transient @volatile private var cached: (Long, Trainer.LogisticModel) = _
-  @volatile private var failStreak: Int = 0
-
-  /** The version currently serving, if any batch has resolved one. */
-  def currentVersion: Option[Long] = Option(cached).map(_._1)
-
-  /** Consecutive resolve failures absorbed by the cached model — 0 in
-    * steady state; a growing streak distinguishes a persistently broken
-    * store from a transient torn read.
-    */
-  def consecutiveFailures: Int = failStreak
-
-  /** Resolve the latest stored version, rebuilding the model only when
-    * the version moved since the last batch. Torn-read protection: a
-    * promotion is a non-atomic parquet append, so `latestVersion` can
-    * become visible while some of the new version's rows are not — any
-    * read or rebuild failure keeps serving the cached version for THIS
-    * batch and re-probes at the next (a batch never goes unscored, and
-    * a half-visible promotion never builds a truncated model when its
-    * partial slice fails `logisticOf`'s row-shape requires).
-    */
-  def resolve(spark: SparkSession): (Long, Trainer.LogisticModel) = {
-    val c = cached
-    try {
-      val store = spark.read.parquet(storePath)
-      val latest = ModelStore.latestVersion(store, modelId).getOrElse(
-        throw new IllegalStateException(
-          s"HotSwapLogistic: no versions of '$modelId' in $storePath"))
-      if (c == null || c._1 != latest) {
-        val m = ModelStore.logisticOf(
-          ServedModel.body(ModelStore.rowsOf(store, modelId, latest)))
-        cached = (latest, m)
-      }
-      failStreak = 0
-      cached
-    } catch {
-      case NonFatal(e) if c != null =>
-        // keep serving the cached version, but NEVER silently: a
-        // persistently broken store (vs a transient torn read) must
-        // show in the logs and in the streak counter
-        failStreak += 1
-        ModelSwap.log.warn(
-          s"HotSwapLogistic($modelId): resolve failed ($failStreak " +
-            s"consecutive); serving cached version ${c._1}", e)
-        c
-    }
-  }
-
-  /** foreachBatch body: score the micro-batch with the latest stored
-    * model, stamping the version that produced each row (the audit
-    * column the reference's performance history keys on). Feature
-    * presence is re-checked on every resolve — a promoted version may
-    * legally change the feature set, so the plan-build-time gate of the
-    * baked-in scorers moves to the swap point here.
-    */
-  def scoreBatch(batch: DataFrame): DataFrame = {
-    val (ver, m) = resolve(batch.sparkSession)
-    val missing = m.features.filterNot(batch.columns.contains)
-    require(missing.isEmpty,
-      s"HotSwapLogistic: version $ver features absent from the batch: $missing")
-    batch.withColumn("model_version", lit(ver))
-      .withColumn("model_margin", Trainer.margin(m))
-      .withColumn("model_probability", Trainer.probability(m))
-  }
-}
-
 /** Kind-dispatched rebuild of ANY stored model family into its serving
   * form — the engine twin of the reference retrainer's `joblib.load` of
   * whatever estimator class was dumped (`feedback/feedback_system.py:
@@ -127,25 +32,12 @@ object ServedModel {
     */
   final case class Built(kind: String, features: Seq[String], score: Column)
 
-  /** Torn-read manifest guard — now lives on the store itself
-    * ([[ModelStore.withManifest]]; [[ModelStore.publish]] is the
-    * canonical write path and emits it by default). Kept here as
-    * forwarding aliases for existing callers.
-    */
-  def withManifest(rows: Seq[ModelStore.ModelRow]): Seq[ModelStore.ModelRow] =
-    ModelStore.withManifest(rows)
-
-  /** Strip (and, when present, enforce) the manifest row: the returned
-    * body is what the family `*Of` readers consume.
-    */
-  def body(rows: Seq[ModelStore.ModelRow]): Seq[ModelStore.ModelRow] =
-    ModelStore.body(rows)
-
   /** Rebuild one (model_id, version) slice into its serving form,
-    * dispatching on the stored `kind`.
+    * dispatching on the stored `kind`. A torn-read manifest row
+    * ([[ModelStore.withManifest]]) is checked and stripped first.
     */
   def of(rows: Seq[ModelStore.ModelRow]): Built = {
-    val b = body(rows)
+    val b = ModelStore.body(rows)
     require(b.nonEmpty, "ServedModel: empty model slice")
     val kinds = b.map(_.kind).distinct
     require(kinds.size == 1,
@@ -220,13 +112,31 @@ object ServedModel {
   }
 }
 
-/** [[HotSwapLogistic]] generalized to the FULL stored zoo: per batch,
-  * re-resolve the latest version of `modelId` in the store, rebuild via
-  * [[ServedModel.of]] (kind-dispatched — the promoted version may be a
-  * different family than the one serving), and stamp every scored row
-  * with the version AND kind that produced it. Same cost model as the
-  * logistic wrapper: one 1-row max + (on version movement only) one
-  * model-sized collect per micro-batch; steady state is a footer read.
+/** Micro-batch model hot-swap — the engine twin of the reference
+  * retrainer's save-then-RELOAD lifecycle (`feedback/feedback_system.py:
+  * 308-388` retrains, joblib-dumps, and the serving process picks the
+  * new estimator up without a restart). The stateless scorers in
+  * [[StreamingFeatures]] bake the model literals in at plan-build; this
+  * wrapper instead re-resolves the latest version of `modelId` in the
+  * versioned [[graft.scoring.ModelStore]] parquet table at every
+  * micro-batch, rebuilds it via [[ServedModel.of]] (kind-dispatched —
+  * the promoted version may be a different family than the one
+  * serving), and stamps every scored row with the version AND kind that
+  * produced it. A version promoted BETWEEN batches starts scoring at the
+  * next batch boundary — the foreachBatch body is the swap point.
+  *
+  * Cost model: one 1-row max over the model table per micro-batch
+  * (O(model parts) rows of narrow parquet — never fact-table sized),
+  * plus one model-sized collect only when the version moves; steady
+  * state is a footer read.
+  *
+  * Usage:
+  * {{{
+  *   val swap = new HotSwapScorer(storePath, "fraud_lr")
+  *   features.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+  *     sink(swap.scoreBatch(b))
+  *   }
+  * }}}
   */
 final class HotSwapScorer(storePath: String, modelId: String)
     extends Serializable {
@@ -295,8 +205,8 @@ final class HotSwapScorer(storePath: String, modelId: String)
   }
 }
 
-/** Shared slf4j logger for the hot-swap wrappers (slf4j ships on
-  * Spark's classpath; the wrappers log through it so suppressed resolve
+/** slf4j logger for the hot-swap wrapper (slf4j ships on
+  * Spark's classpath; the wrapper logs through it so suppressed resolve
   * failures land in the same sink as the engine's own warnings).
   */
 private[streaming] object ModelSwap {

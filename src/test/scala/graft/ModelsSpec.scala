@@ -724,14 +724,14 @@ class ModelsSpec extends AnyFunSuite {
         Trees.predict(dt).cast("double")))
     for ((kind, rows, feats, twin) <- cases) {
       // plain slice and manifest-guarded slice both rebuild
-      for (slice <- Seq(rows, ServedModel.withManifest(rows))) {
+      for (slice <- Seq(rows, ModelStore.withManifest(rows))) {
         val built = ServedModel.of(slice)
         assert(built.kind == kind && built.features == feats, kind)
         assert(scores(built.score) == scores(twin), s"$kind score parity")
       }
       // torn slice: manifest count no longer matches -> loud reject
-      val torn = ServedModel.withManifest(rows).dropRight(2) :+
-        ServedModel.withManifest(rows).last
+      val torn = ModelStore.withManifest(rows).dropRight(2) :+
+        ModelStore.withManifest(rows).last
       val e = intercept[IllegalArgumentException] { ServedModel.of(torn) }
       assert(e.getMessage.contains("torn read"), kind)
     }
@@ -757,7 +757,7 @@ class ModelsSpec extends AnyFunSuite {
     // (feature ORDER included — the delta's summation order depends on it)
     val (nb2, cal2) = ModelStore.nbPlattOf(rows)
     assert(nb2 == nb && cal2 == cal)
-    for (slice <- Seq(rows, ServedModel.withManifest(rows))) {
+    for (slice <- Seq(rows, ModelStore.withManifest(rows))) {
       val built = ServedModel.of(slice)
       assert(built.kind == "nb_platt" && built.features == Seq("f1", "f2"))
       // twin: the nbCalibrated serving chain (d4 column -> Platt sigmoid,

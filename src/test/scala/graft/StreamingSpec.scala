@@ -770,7 +770,7 @@ class StreamingSpec extends AnyFunSuite {
   test("model hot-swap: a version promoted between micro-batches flips scores at the batch boundary") {
     import spark.implicits._
     import graft.scoring.{ModelStore, Trainer}
-    import graft.streaming.HotSwapLogistic
+    import graft.streaming.HotSwapScorer
     // the retrainer lifecycle: v1 serves, a new version lands in the
     // store BETWEEN batches, the NEXT batch scores with it — no restart
     val feats = Seq("txn_count_1h", "txn_amount_sum_1h")
@@ -781,7 +781,7 @@ class StreamingSpec extends AnyFunSuite {
       .resolve("models").toString
     ModelStore.table(spark, ModelStore.logisticRows("fraud_lr", 1L, v1))
       .write.parquet(store)
-    val swap = new HotSwapLogistic(store, "fraud_lr")
+    val swap = new HotSwapScorer(store, "fraud_lr")
 
     val tx = Tables.transactions(spark, "/root/testdata/sf0.001")
       .select(col("customer_id"), unix_micros(col("event_timestamp")).as("ts_micros"),
@@ -796,7 +796,7 @@ class StreamingSpec extends AnyFunSuite {
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         out ++= swap.scoreBatch(b)
           .select(col("customer_id"), col("ts_micros"), col("model_version"),
-            col("model_margin"))
+            col("model_score"))
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         ()
@@ -1213,7 +1213,7 @@ class StreamingSpec extends AnyFunSuite {
   test("hot-swap zoo: AdaBoost v1 -> torn boosted-tree v2 rejected -> clean v3 flips family at the batch boundary") {
     import spark.implicits._
     import graft.scoring.{AdaBoost, Boosting, ModelStore}
-    import graft.streaming.{HotSwapScorer, ServedModel}
+    import graft.streaming.HotSwapScorer
     // v1: a SAMME stump ensemble; v3: a boosted depth-2 TREE model — the
     // reference retrainer reloads whatever family won the retrain
     // (`feedback/feedback_system.py:308-388`), so a promotion may change
@@ -1230,7 +1230,7 @@ class StreamingSpec extends AnyFunSuite {
         -0.05, 0.15, -0.25, 0.35)))
     val store = java.nio.file.Files.createTempDirectory("zoostore")
       .resolve("models").toString
-    ModelStore.table(spark, ServedModel.withManifest(
+    ModelStore.table(spark, ModelStore.withManifest(
         ModelStore.adaBoostRows("fraud", 1L, ab)))
       .write.parquet(store)
     val swap = new HotSwapScorer(store, "fraud")
@@ -1263,7 +1263,7 @@ class StreamingSpec extends AnyFunSuite {
       // TORN promotion: version 2 lands with one round row missing but
       // its manifest declaring the full count — the swap must reject the
       // partial slice and keep serving v1 for the whole batch
-      val v2full = ServedModel.withManifest(
+      val v2full = ModelStore.withManifest(
         ModelStore.boostedTreesRows("fraud", 2L, btr))
       ModelStore.table(spark,
           v2full.filterNot(r => r.part == "round" && r.idx == 1L))
@@ -1272,7 +1272,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(swap.currentVersion == Some(1L) && swap.currentKind == Some("adaboost"),
         "torn v2 must not serve")
       // clean promotion: v3 = the complete tree model — next batch flips
-      ModelStore.table(spark, ServedModel.withManifest(
+      ModelStore.table(spark, ModelStore.withManifest(
           ModelStore.boostedTreesRows("fraud", 3L, btr)))
         .write.mode("append").parquet(store)
       input.addData(part3.toIndexedSeq); query.processAllAvailable()
@@ -1653,7 +1653,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.graftbridge.ColumnBridge.intDiv
     import graft.scoring.{ModelStore, Trainer}
-    import graft.streaming.{HotSwapScorer, ServedModel}
+    import graft.streaming.HotSwapScorer
     def buckets(d: org.apache.spark.sql.DataFrame) = d
       .withColumn("hb", hour(timestamp_micros(col("ts_micros"))))
       .withColumn("dowi", pmod(intDiv(col("ts_micros"), lit(86400000000L)), lit(7L)))
@@ -1670,7 +1670,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq(0.5), 0.1, 1, 0.5)
     val store = java.nio.file.Files.createTempDirectory("nbstore")
       .resolve("models").toString
-    ModelStore.table(spark, ServedModel.withManifest(
+    ModelStore.table(spark, ModelStore.withManifest(
         ModelStore.logisticRows("served", 1L, lr)))
       .write.parquet(store)
     val swap = new HotSwapScorer(store, "served")
@@ -1699,7 +1699,7 @@ class StreamingSpec extends AnyFunSuite {
     try {
       input.addData(half1.toIndexedSeq); query.processAllAvailable()
       assert(swap.currentKind == Some("logistic"))
-      ModelStore.table(spark, ServedModel.withManifest(
+      ModelStore.table(spark, ModelStore.withManifest(
           ModelStore.nbPlattRows("served", 2L, nb, calib)))
         .write.mode("append").parquet(store)
       input.addData(half2.toIndexedSeq); query.processAllAvailable()
@@ -1723,15 +1723,15 @@ class StreamingSpec extends AnyFunSuite {
   test("hot-swap pin/unpin: rollback serves the pinned version, unpin resumes latest-wins") {
     import spark.implicits._
     import graft.scoring.{AdaBoost, ModelStore, Trainer}
-    import graft.streaming.{HotSwapScorer, ServedModel}
+    import graft.streaming.HotSwapScorer
     val v1 = Trainer.LogisticModel(Seq("txn_count_1h"), Seq(0.0), Seq(1.0),
       Seq(0.5), 0.1, 1, 0.5)
     val v2 = Seq(AdaBoost.Round("txn_count_1h", 2.0, 0, 1, 0.3, 2.3333, 0.8473))
     val store = java.nio.file.Files.createTempDirectory("pinstore")
       .resolve("models").toString
-    ModelStore.table(spark, ServedModel.withManifest(
+    ModelStore.table(spark, ModelStore.withManifest(
         ModelStore.logisticRows("m", 1L, v1))).write.parquet(store)
-    ModelStore.table(spark, ServedModel.withManifest(
+    ModelStore.table(spark, ModelStore.withManifest(
         ModelStore.adaBoostRows("m", 2L, v2)))
       .write.mode("append").parquet(store)
     val swap = new HotSwapScorer(store, "m")
