@@ -58,22 +58,25 @@ class AmlFeatureStore(spark: SparkSession) {
   private val coldStart: Map[String, Column] =
     Risk.model.map { case (f, _, _) => f -> lit(0.0) }.toMap
 
-  /** The /predict surface: requests (request_id, customer_id, amount) are
-    * looked up against the snapshot (broadcast when small), zero-defaulted
-    * on cold start, scored, classified, and explained — one narrow plan,
-    * no per-request round trips.
+  /** The /predict surface: requests (request_id, customer_id, amount)
+    * left-joined to the snapshot on customer_id (broadcast when small),
+    * then one projection that zero-defaults a cold-start customer's
+    * features ([[Snapshot.filled]]) and scores, classifies and explains
+    * each request with the native risk nodes ([[Risk]]). No per-request
+    * round trips; a one-request call runs two jobs (the broadcast and the
+    * collect).
     */
   def predict(requests: DataFrame, snapshot: DataFrame): DataFrame = {
     // keep only (customer_id, feature columns): the snapshot's event-level
     // amount/merchant columns would collide with the request's
-    val feats = Snapshot.lookup(
-      requests,
+    val joined = requests.join(
       snapshot.drop("transaction_id", "merchant_id", "event_timestamp", "amount"),
-      "customer_id", coldStart)
-    val s = Risk.score(col("amount"))
-    feats.select(col("request_id"), col("customer_id"), col("amount"),
+      Seq("customer_id"), "left")
+    val feature = Snapshot.filled(coldStart) _
+    val s = Risk.score(col("amount"), feature)
+    joined.select(col("request_id"), col("customer_id"), col("amount"),
       s.as("risk_score"), Risk.level(s).as("risk_level"),
-      Risk.explanation.as("explanation"))
+      Risk.explanation(feature).as("explanation"))
   }
 
   /** Point-in-time training features for decoupled label rows (J2):

@@ -29,16 +29,25 @@ object Snapshot {
   def withTtl(snapshot: DataFrame, ts: Column, now: Column, ttlSeconds: Long): DataFrame =
     snapshot.where(unix_micros(ts) > unix_micros(now) - ttlSeconds * 1000000L)
 
-  /** Feature lookup join: left join requests -> snapshot on `key`, filling
-    * missing feature columns with the cold-start defaults
-    * (`api/main.py:343-363`). Broadcast chosen by Catalyst/AQE when the
-    * snapshot is small; at 100 TB both sides hash-partition on the key.
+  /** Feature lookup join: left join requests -> snapshot on `key`, then
+    * one projection that keeps every column in place and fills each
+    * `defaults` column with [[filled]] (`api/main.py:343-363`). Broadcast
+    * chosen by Catalyst/AQE when the snapshot is small; at 100 TB both
+    * sides hash-partition on the key.
     */
   def lookup(requests: DataFrame, snapshot: DataFrame, key: String,
              defaults: Map[String, Column]): DataFrame = {
     val joined = requests.join(snapshot, Seq(key), "left")
-    defaults.foldLeft(joined) { case (df, (name, default)) =>
-      df.withColumn(name, coalesce(col(name), default))
-    }
+    val missing = defaults.keySet -- joined.columns
+    require(missing.isEmpty, s"lookup: no column ${missing.mkString(", ")} to default")
+    joined.select(joined.columns.toSeq.map(c => filled(defaults)(c).as(c)): _*)
   }
+
+  /** Column `name` of a lookup join with its cold-start default, if it has
+    * one, in place of NULL (a key the snapshot lacks). A caller that
+    * computes over the join reads its columns through this to keep the
+    * lookup and its own expressions in one projection.
+    */
+  def filled(defaults: Map[String, Column])(name: String): Column =
+    defaults.get(name).fold(col(name))(coalesce(col(name), _))
 }

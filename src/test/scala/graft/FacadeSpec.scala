@@ -39,6 +39,38 @@ class FacadeSpec extends AnyFunSuite {
     assert(coldScore == 0.0 && coldLevel == "LOW" && coldExpl.isEmpty)
   }
 
+  test("predict serves one request from one projection, two jobs and no new classes") {
+    import spark.implicits._
+    val store = new AmlFeatureStore(spark)
+    val tx = Tables.transactions(spark, "/root/testdata/sf0.001")
+    val asOf = tx.agg(max(col("event_timestamp"))).head.getTimestamp(0)
+    // a stored snapshot, as a server reads it
+    val dir = java.nio.file.Files.createTempDirectory("facade-snap").toString
+    store.customerSnapshot(store.customerFeatures(tx), lit(asOf), ttlSeconds = 30L * 86400)
+      .write.mode("overwrite").parquet(dir)
+    val snap = spark.read.parquet(dir)
+    val keys = snap.select("customer_id").as[Long].take(2)
+    def request(id: Long, key: Long, amount: Double) =
+      store.predict(Seq((id, key, amount)).toDF("request_id", "customer_id", "amount"), snap)
+
+    // the defaults and the whole model sit in one Project above the join
+    val plan = request(1L, keys(0), 120.0).queryExecution.optimizedPlan
+    def projectsAbove(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int = p match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.Join => 0
+      case q: org.apache.spark.sql.catalyst.plans.logical.Project =>
+        1 + q.children.map(projectsAbove).sum
+      case q => q.children.map(projectsAbove).sum
+    }
+    assert(projectsAbove(plan) == 1, plan.toString)
+
+    val prof = graft.tools.RunProfile(spark)
+    val first = prof.measure(request(1L, keys(0), 120.0).collect())
+    assert(first.jobs == 2, first)
+    val second = prof.measure(request(2L, keys(1), 15000.0).collect())
+    assert(second.jobs == 2 && second.compiles == 0, second)
+    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
   test("snapshot TTL expires stale customers back to cold start") {
     import spark.implicits._
     val store = new AmlFeatureStore(spark)
